@@ -9,9 +9,9 @@ Packaging (north rule: ``spark-submit --py-files``):
         --checkpoint s3://bucket/ck --watermark "10 minutes" --continuous
 
 Jobs: turns (dedup + quality enrich), windows (tumbling agg), cep (pattern
-events; --cep-variant picks the state layout), sessions (session_window
-agg), neardup (MinHash candidates), context (prev-turn join), merge
-(size-capped span merge, W6 merge mode), compact (maintenance: rewrite a
+events: role alternation, tool pairing), sessions (session_window agg),
+neardup (MinHash candidates), context (prev-turn join), merge (size-capped
+span merge, W6 merge mode), compact (maintenance: rewrite a
 sink's committed micro-batch dirs into one generation — small-files
 compaction; only --output is required), assetinfo (stateless multimodal
 ingest enrichment: sniff/sha256/header dims + the reference's video_info
@@ -54,10 +54,6 @@ def main() -> None:
     p.add_argument("--trigger-interval", default="10 seconds")
     p.add_argument("--metrics", default=None, help="progress metrics jsonl path")
     p.add_argument("--no-dedup", action="store_true")
-    p.add_argument("--cep-variant", choices=["bucketed", "perconv", "tws"],
-                   default="bucketed",
-                   help="CEP state layout (tws = transformWithStateInPandas/"
-                        "RocksDB; needs the protobuf package)")
     p.add_argument("--target-partitions", type=int, default=None,
                    help="compact: repartition the generation to N files")
     p.add_argument("--est-state-keys", type=int, default=None,
@@ -123,7 +119,6 @@ def main() -> None:
         q, _ = jobs.cep_pipeline(
             close_gap=args.gap,
             max_files_per_trigger=args.max_files_per_trigger,
-            variant=args.cep_variant,
             **common,
         )
     elif args.job == "neardup":

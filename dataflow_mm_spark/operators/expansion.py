@@ -101,9 +101,12 @@ def merge_spans_capped(
     if group_buckets:
         def merge_bucketed(pdf: pd.DataFrame) -> pd.DataFrame:
             rows = []
-            for keys, g in pdf.groupby(list(key_cols), sort=False):
+            # dropna=False: a NULL key is a group of its own, as it is in
+            # the per-key path; pandas labels it NaN, emitted as NULL
+            for keys, g in pdf.groupby(list(key_cols), sort=False, dropna=False):
                 if not isinstance(keys, tuple):
                     keys = (keys,)
+                keys = tuple(None if pd.isna(k) else k for k in keys)
                 rows.extend(
                     [*keys, seq, s, e, n]
                     for seq, s, e, n in greedy_merge_spans(

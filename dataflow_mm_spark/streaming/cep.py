@@ -5,36 +5,38 @@ Detects, per ``conv_id`` in event (turn_idx) order:
 * tool request→result pairing (assistant turn carrying a <tool_call> span
   must be followed — next turn_idx — by a role='tool' turn with the same
   tool name) → ``tool_paired`` / ``tool_unpaired`` events;
-* conversation close via event-time timeout (watermark passes last activity
-  + gap) → ``conv_summary`` event with per-conversation counters.
+* conversation close via event time (watermark passes last activity + gap)
+  → ``conv_summary`` event with per-conversation counters.
 
 Semantics match the batch forms in operators/cep.py (their outputs are the
 replay oracle — tests assert set equality on the detection rows).
 
-Out-of-order handling: arrivals are buffered in state keyed by turn_idx and
-the FSM only consumes the contiguous prefix (next_idx, next_idx+1, ...);
-anything beyond a gap waits for the missing turn. At close (watermark passes
-last activity + gap) the pending buffer is FLUSHED through the FSM in
-ascending turn order (gap-skip) so detections among buffered turns match the
-batch oracle, the open tool call resolves unpaired (close defines the
-effective pairing latency — batch analogue: tool_pairing(max_latency_sec=
-close_gap)), and the state collapses to a small TOMBSTONE {next_idx,
-last_ua_role} retained for RETENTION_GAPS x the gap: a conversation that RESUMES after a
-close continues its FSM (cross-gap role alternation stays batch-exact)
-instead of restarting at turn 0 and wedging. A stale duplicate of an
-already-consumed turn_idx is dropped on arrival. State is a flat struct
-(Python state API limitation, SURVEY.md §7.7) with the pending buffer
-JSON-encoded.
+State layout: the state key is hash(conv_id) % buckets, not conv_id — one
+applyInPandasWithState group per conversation pays the per-group Python
+constant for every conversation. Each bucket's state is one segment-encoded
+blob holding the FSM state vector of every conversation in the bucket (see
+_enc_seg); a conversation the batch does not touch rides through verbatim.
 
-Skew note: state is keyed by conv_id, so a mega-conversation lands on one
-task — state size is bounded by the pending buffer (gap-bounded), not by
-conversation length, because the FSM discards consumed turns.
+Out-of-order handling: arrivals are buffered in the state vector keyed by
+turn_idx and the FSM only consumes the contiguous prefix (next_idx,
+next_idx+1, ...); anything beyond a gap waits for the missing turn. At close
+the pending buffer is FLUSHED through the FSM in ascending turn order
+(gap-skip) so detections among buffered turns match the batch oracle, the
+open tool call resolves unpaired (close defines the effective pairing
+latency — batch analogue: tool_pairing(max_latency_sec=close_gap)), and the
+vector collapses to a small TOMBSTONE {next_idx, last_ua_role} retained for
+RETENTION_GAPS x the gap: a conversation that RESUMES after a close
+continues its FSM (cross-gap role alternation stays batch-exact) instead of
+restarting at turn 0 and wedging. A stale duplicate of an already-consumed
+turn_idx is dropped on arrival.
+
+Skew note: a conversation's state is bounded by its pending buffer
+(gap-bounded), not by its length, because the FSM discards consumed turns.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -72,305 +74,8 @@ OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("next_idx", T.IntegerType()),
-        T.StructField("last_ua_role", T.StringType()),
-        T.StructField("open_tool", T.StringType()),
-        T.StructField("open_tool_idx", T.IntegerType()),
-        T.StructField("open_tool_ts_us", T.LongType()),
-        T.StructField("pending_json", T.StringType()),
-        T.StructField("n_turns", T.IntegerType()),
-        T.StructField("n_violations", T.IntegerType()),
-        T.StructField("n_paired", T.IntegerType()),
-        T.StructField("n_unpaired", T.IntegerType()),
-        T.StructField("max_ts_us", T.LongType()),
-    ]
-)
-
-_EMPTY = (0, None, None, None, None, "{}", 0, 0, 0, 0, 0)
-
-
-def _ts_us(ts) -> int:
-    return int(pd.Timestamp(ts).value // 1000)
-
-
-def _unpack(st_t) -> list:
-    """Flat state tuple → working list with the pending buffer as an
-    int-keyed dict (int keys avoid a str() per buffered turn in the hot
-    consume loop; json stringifies them at pack time)."""
-    return [
-        st_t[0], st_t[1], st_t[2], st_t[3], st_t[4],
-        {int(k): tuple(v) for k, v in json.loads(st_t[5] or "{}").items()},
-        st_t[6], st_t[7], st_t[8], st_t[9], st_t[10],
-    ]
-
-
-def _pack(st: list) -> tuple:
-    return (
-        st[0], st[1], st[2], st[3], st[4], json.dumps(st[5]),
-        st[6], st[7], st[8], st[9], st[10],
-    )
-
-
-def _cep_fn(
-    key: tuple,
-    pdf_iter: Iterator[pd.DataFrame],
-    state: GroupState,
-    close_gap_us: int = 0,
-) -> Iterator[pd.DataFrame]:
-    conv_id = key[0]
-    wm_ms = state.getCurrentWatermarkMs()
-    if state.hasTimedOut:
-        st = _unpack(state.get)
-        out: list = []
-        if st[6] > 0 or st[5]:
-            # close with activity: flush pending through the FSM, emit the
-            # summary, keep a tombstone so a later resume continues in place
-            # (unless its retention is already behind the watermark)
-            _conv_close(conv_id, st, out)
-            if st[10] + RETENTION_GAPS * close_gap_us < wm_ms * 1000:
-                state.remove()
-            else:
-                state.update(_pack(st))
-                state.setTimeoutTimestamp(
-                    max(
-                        st[10] // 1000 + RETENTION_GAPS * (close_gap_us // 1000),
-                        wm_ms + 1000,
-                    )
-                )
-        else:
-            # tombstone with no activity since its close: retention expired
-            state.remove()
-        if out:
-            yield pd.DataFrame(
-                out, columns=["conv_id", "kind", "turn_idx", "detail", "ts"]
-            )
-        return
-
-    st = _unpack(state.get) if state.exists else _unpack(_EMPTY)
-    out = []
-    arrivals = []
-    for pdf in pdf_iter:
-        for r in pdf.itertuples():
-            arrivals.append(
-                (
-                    int(r.turn_idx),
-                    r.role,
-                    r.tool if isinstance(r.tool, str) else None,
-                    bool(r.has_call),
-                    _ts_us(r.ts),
-                )
-            )
-    _conv_step(conv_id, st, arrivals, out)
-    state.update(_pack(st))
-    # close an ACTIVE conversation when the watermark passes last activity +
-    # gap; a TOMBSTONE that received only stale duplicates (all skipped) must
-    # keep its RETENTION horizon — mirroring _next_event_us in the bucketed
-    # path — else the close-gap timeout removes it after 1 gap and a later
-    # resume restarts the FSM at 0. Timeouts are strictly beyond the watermark.
-    horizon_us = close_gap_us if (st[6] > 0 or st[5]) else RETENTION_GAPS * close_gap_us
-    state.setTimeoutTimestamp(
-        max(st[10] // 1000 + horizon_us // 1000, wm_ms + 1000)
-    )
-    if out:  # skipping the empty frame saves a pandas alloc per quiet key
-        yield pd.DataFrame(out, columns=["conv_id", "kind", "turn_idx", "detail", "ts"])
-
-
-def cep_stream(turns: DataFrame, close_gap: str = "30 minutes") -> DataFrame:
-    """turns (streaming, watermarked on ts) → detection event stream."""
-    gap_us = _parse_gap_us(close_gap)
-
-    def fn(key, it, state):
-        return _cep_fn(key, it, state, close_gap_us=gap_us)
-
-    from pyspark.sql import functions as F
-
-    # has_call computed JVM-side so the text column (the bulk of the bytes)
-    # never crosses the Arrow boundary into the Python state function
-    return (
-        turns.select(
-            "conv_id",
-            "turn_idx",
-            "role",
-            _has_call(F.col("text")).alias("has_call"),
-            "tool",
-            "ts",
-        )
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas variant (r4) — Spark's arbitrary-state v2 API.
-# Same FSM (_conv_step/_conv_close), but state lives in a per-key ValueState
-# managed by the RocksDB state store (REQUIRED by the API) and conversation
-# close is a registered event-time TIMER instead of a GroupStateTimeout /
-# bucket sweep. Scale properties vs the two applyInPandasWithState forms:
-# only keys with input or an expired timer reach Python (quiet conversations
-# cost zero Arrow traffic, like the bucketed path's verbatim carry but
-# without the bucket blob), state is off-heap/disk-spilling by construction
-# (no provider crossover to manage), and timers replace the close sweep.
-# The trade is per-key Python dispatch (one handleInputRows per conv per
-# batch), which the bucketed path amortizes over ~buckets groups.
-# Runtime gate: pyspark's TWS state-server client is protobuf-encoded and
-# this sandbox has no protobuf package (and no installs), so the Spark-side
-# parity test is skip-gated (tws_available); the processor's own glue —
-# pack/unpack, timer retargeting, close/tombstone/retention — is fully
-# unit-tested with fakes (tests/test_streaming.py test_cep_tws_processor_glue).
-# ---------------------------------------------------------------------------
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-)
-
-
-class _CepProcessor(StatefulProcessor):
-    """StatefulProcessor wrapping the shared conversation FSM.
-
-    Timer discipline: exactly one live timer per conversation — each input
-    batch retargets it to max(last_activity + horizon, watermark + 1s); the
-    horizon is the close gap while active, RETENTION_GAPS × gap for a
-    tombstone (mirroring _cep_fn's setTimeoutTimestamp)."""
-
-    def __init__(self, close_gap_us: int):
-        self._gap_us = close_gap_us
-
-    def init(self, handle) -> None:
-        self._handle = handle
-        self._st = handle.getValueState("fsm", STATE_SCHEMA)
-
-    def _retarget(self, new_ms: int) -> None:
-        have_new = False
-        for t in list(self._handle.listTimers()):
-            if t == new_ms:
-                have_new = True
-            else:
-                self._handle.deleteTimer(t)
-        if not have_new:
-            self._handle.registerTimer(new_ms)
-
-    def handleInputRows(self, key, rows, timerValues):
-        conv_id = key[0]
-        st = _unpack(tuple(self._st.get())) if self._st.exists() else _unpack(_EMPTY)
-        out: list = []
-        arrivals = []
-        for pdf in rows:
-            for r in pdf.itertuples():
-                arrivals.append(
-                    (
-                        int(r.turn_idx),
-                        r.role,
-                        r.tool if isinstance(r.tool, str) else None,
-                        bool(r.has_call),
-                        _ts_us(r.ts),
-                    )
-                )
-        _conv_step(conv_id, st, arrivals, out)
-        self._st.update(_pack(st))
-        wm_ms = timerValues.getCurrentWatermarkInMs()
-        horizon_us = (
-            self._gap_us if (st[6] > 0 or st[5]) else RETENTION_GAPS * self._gap_us
-        )
-        self._retarget(max(st[10] // 1000 + horizon_us // 1000, wm_ms + 1000))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["conv_id", "kind", "turn_idx", "detail", "ts"]
-            )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        conv_id = key[0]
-        if not self._st.exists():
-            return
-        st = _unpack(tuple(self._st.get()))
-        wm_ms = timerValues.getCurrentWatermarkInMs()
-        out: list = []
-        if st[6] > 0 or st[5]:
-            _conv_close(conv_id, st, out)
-            if st[10] + RETENTION_GAPS * self._gap_us < wm_ms * 1000:
-                self._st.clear()
-            else:
-                self._st.update(_pack(st))
-                self._retarget(
-                    max(
-                        st[10] // 1000 + RETENTION_GAPS * (self._gap_us // 1000),
-                        wm_ms + 1000,
-                    )
-                )
-        else:
-            self._st.clear()  # tombstone retention expired
-        if out:
-            yield pd.DataFrame(
-                out, columns=["conv_id", "kind", "turn_idx", "detail", "ts"]
-            )
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def close(self) -> None:
-        pass
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas needs the ``protobuf`` package (its
-    state-server protocol is protobuf-encoded — pyspark
-    ``stateful_processor_api_client`` imports ``google.protobuf``). Absent
-    in this sandbox (no installs); present on any cluster with standard
-    pyspark extras."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def cep_stream_tws(turns: DataFrame, close_gap: str = "30 minutes") -> DataFrame:
-    """transformWithStateInPandas form of cep_stream (same detections).
-
-    Requires ``spark.sql.streaming.stateStore.providerClass`` =
-    ``ROCKSDB_PROVIDER`` at query start (jobs.cep_pipeline(variant="tws")
-    sets it) and the ``protobuf`` package (see tws_available)."""
-    from pyspark.sql import functions as F
-
-    if not tws_available():
-        raise ImportError(
-            "cep_stream_tws needs the 'protobuf' package (pyspark's "
-            "transformWithState state-server client is protobuf-encoded); "
-            "install protobuf or use cep_stream/cep_stream_bucketed"
-        )
-    gap_us = _parse_gap_us(close_gap)
-    return (
-        turns.select(
-            "conv_id",
-            "turn_idx",
-            "role",
-            _has_call(F.col("text")).alias("has_call"),
-            "tool",
-            "ts",
-        )
-        .groupBy("conv_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_CepProcessor(gap_us),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
-
-
+# max_ts_us (the bucket's latest event time) is carried but not read: it is
+# part of the checkpointed state schema, which an existing checkpoint pins
 BUCKET_STATE_SCHEMA = T.StructType(
     [
         T.StructField("convs_blob", T.StringType()),
@@ -378,8 +83,7 @@ BUCKET_STATE_SCHEMA = T.StructType(
     ]
 )
 
-# per-conv state vector layout (both variants; encoded into the bucket blob
-# for the bucketed path):
+# per-conv state vector layout (encoded into the bucket blob by _enc_seg):
 # [next_idx, last_ua_role, open_tool, open_idx, open_ts_us, pending{idx:[...]},
 #  n_turns, n_violations, n_paired, n_unpaired, max_ts_us]
 # A TOMBSTONE (closed conversation awaiting retention expiry) is the same
@@ -465,45 +169,10 @@ def _seg_ne(seg: str) -> int:
     return int(seg[a : seg.index(_FLD_SEP, a)])
 
 
-def _transition(conv_id: str, st: list, idx: int, role, tool, has_call,
-                ts_us: int, out: list) -> None:
-    """ONE FSM step — the single-source parity target is the batch operator
-    pair (operators/cep.py role_violations + tool_pairing)."""
-    ts = pd.Timestamp(ts_us, unit="us")
-    st[6] += 1  # n_turns
-    # resolve an open tool call: the next consumed turn decides pairing
-    # (== batch lead() over turn order)
-    if st[2] is not None:
-        if role == "tool" and tool == st[2]:
-            out.append((conv_id, "tool_paired", st[3], st[2], ts))
-            st[8] += 1
-        else:
-            out.append(
-                (conv_id, "tool_unpaired", st[3], st[2],
-                 pd.Timestamp(st[4], unit="us"))
-            )
-            st[9] += 1
-        st[2] = st[3] = st[4] = None
-    # role alternation over user/assistant turns only (== batch lag())
-    if role in ("user", "assistant"):
-        if st[1] == role:
-            out.append((conv_id, "role_violation", idx, role, ts))
-            st[7] += 1
-        st[1] = role
-    # new tool call opens
-    if has_call and role == "assistant" and tool:
-        st[2], st[3], st[4] = tool, idx, ts_us
-    st[0] = idx + 1
-
-
 def _conv_step(conv_id: str, st: list, arrivals: list, out: list) -> None:
-    """Buffer arrivals, then consume the contiguous prefix.
-
-    The consume loop INLINES _transition: at ~10us/turn total budget the
-    call overhead is a measured ~30% at local[8] (537k vs 790k turns/s on
-    the 13.7M-turn bench). _transition stays the readable single source for
-    the cold close-flush path; the parity tests cover both copies — edit
-    them TOGETHER."""
+    """Buffer arrivals, then consume the contiguous prefix through the FSM —
+    the one copy of the transition; its parity target is the batch operator
+    pair (operators/cep.py role_violations + tool_pairing)."""
     pending = st[5]
     for turn_idx, role, tool, has_call, ts_us in arrivals:
         if turn_idx < st[0]:
@@ -545,9 +214,9 @@ def _conv_close(conv_id: str, st: list, out: list) -> None:
     effective pairing latency), emit the summary, then collapse to a
     tombstone (counters reset; next_idx/last_ua_role kept for resume)."""
     pending = st[5]
-    for k in sorted(pending):
-        role, tool, has_call, ts_us = pending.pop(k)
-        _transition(conv_id, st, k, role, tool, has_call, ts_us, out)
+    while pending:  # gap-skip: jump to the lowest buffered turn, consume on
+        st[0] = min(pending)
+        _conv_step(conv_id, st, [], out)
     if st[2] is not None:
         out.append(
             (conv_id, "tool_unpaired", st[3], st[2], pd.Timestamp(st[4], unit="us"))
@@ -603,16 +272,17 @@ def _role_code(col):
 def cep_stream_bucketed(
     turns: DataFrame, close_gap: str = "30 minutes", buckets: int = 1024
 ) -> DataFrame:
-    """Scale path: the per-group constant of applyInPandasWithState (~10ms —
-    measured) dominates when every conversation is its own group. Coarsen the
-    state key to hash(conv_id) % buckets and run the per-conversation FSMs
-    inside the bucket state. The bucket value is the segment-encoded blob
-    documented above: untouched conversations ride through verbatim (no
-    decode/encode), the close sweep reads one precomputed next_event_us int
-    per conv, and only touched/closing convs pay field parsing. Conversation
-    close is swept against the current watermark on every invocation plus an
-    event-time timeout for quiet buckets. Output identical to cep_stream
-    (same FSM, same batch-operator parity)."""
+    """turns (streaming, watermarked on ts) → detection event stream.
+
+    The per-group constant of applyInPandasWithState (~10ms — measured)
+    dominates when every conversation is its own group, so the state key is
+    hash(conv_id) % buckets and the per-conversation FSMs run inside the
+    bucket state. The bucket value is the segment-encoded blob documented
+    above: untouched conversations ride through verbatim (no decode/encode),
+    the close sweep reads one precomputed next_event_us int per conv, and
+    only touched/closing convs pay field parsing. Conversation close is swept
+    against the current watermark on every invocation; an event-time timeout
+    wakes quiet buckets for the same sweep."""
     from pyspark.sql import functions as F
 
     gap_us = _parse_gap_us(close_gap)
@@ -634,31 +304,11 @@ def cep_stream_bucketed(
         return _enc_seg(cid, st, gap_us)
 
     def fn(key, pdf_iter, state: GroupState):
+        # a timeout invocation gets one empty frame: no arrivals, so the
+        # untouched-conversation sweep below is all it does
         out: list = []
         wm_ms = state.getCurrentWatermarkMs()
         wm_us = wm_ms * 1000
-
-        if state.hasTimedOut:
-            blob, bucket_max = state.get
-            new_segs, min_ne = [], None
-            for seg in blob.split(_SEG_SEP) if blob else ():
-                ne = _seg_ne(seg)
-                if ne < wm_us:
-                    seg = _close_seg(seg[: seg.index(_FLD_SEP)], seg, wm_us, out)
-                    if seg is None:
-                        continue
-                    ne = _seg_ne(seg)
-                new_segs.append(seg)
-                if min_ne is None or ne < min_ne:
-                    min_ne = ne
-            if new_segs:
-                state.update((_SEG_SEP.join(new_segs), bucket_max))
-                state.setTimeoutTimestamp(max(min_ne // 1000, wm_ms + 1000))
-            else:
-                state.remove()
-            if out:
-                yield pd.DataFrame(out, columns=cols)
-            return
 
         blob, bucket_max = state.get if state.exists else ("", 0)
         index: dict[str, str] = {}
@@ -723,12 +373,11 @@ def cep_stream_bucketed(
             if min_ne is None or ne < min_ne:
                 min_ne = ne
 
-        state.update((_SEG_SEP.join(new_segs), bucket_max))
-        if min_ne is not None:
-            nxt = min_ne // 1000
+        if new_segs:
+            state.update((_SEG_SEP.join(new_segs), bucket_max))
+            state.setTimeoutTimestamp(max(min_ne // 1000, wm_ms + 1000))
         else:
-            nxt = bucket_max // 1000 + gap_us // 1000
-        state.setTimeoutTimestamp(max(nxt, wm_ms + 1000))
+            state.remove()
         if out:
             yield pd.DataFrame(out, columns=cols)
 

@@ -21,7 +21,6 @@ from dataflow_mm_spark.functions.extraction import (
     extract_tool_call_names,
 )
 from dataflow_mm_spark.functions.quality import quality_struct
-from dataflow_mm_spark.streaming.cep import cep_stream
 from dataflow_mm_spark.streaming.dedup import exact_dedup_stream
 from dataflow_mm_spark.streaming.sink import ExactlyOnceParquetSink
 from dataflow_mm_spark.streaming.source import read_transcript_stream
@@ -203,56 +202,26 @@ def cep_pipeline(
     close_gap: str = "30 minutes",
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
-    bucketed: bool = True,
     buckets: int = 1024,
     sink_mode: str = "exactly_once",
-    variant: str | None = None,
 ):
-    """Role-alternation + tool-pairing CEP event stream → sink. Default uses
-    the bucketed state layout (per-group constant amortized over ~buckets
-    groups instead of one group per conversation — see cep_stream_bucketed).
-    ``variant`` overrides the layout: "tws" selects the
-    transformWithStateInPandas form (arbitrary-state v2: per-key RocksDB
-    ValueState + event-time close timers — this sets the session's state
-    store provider to RocksDB, which the API requires); "perconv"/"bucketed"
-    mirror the boolean.
+    """Role-alternation + tool-pairing CEP event stream → sink. State is
+    keyed by hash(conv_id) % ``buckets`` (see cep_stream_bucketed), so the
+    per-group Python constant is paid per bucket, not per conversation.
 
     Deployment note (measured, BENCH.md §2 r4): size ``max_files_per_trigger``
     so rows/batch/executor × ~250B stays within the executor's cache share —
     ≲220k rows per 8-core executor on the bench box. Oversized micro-batches
     blow the shared cache under executor density and BOTH scaling efficiency
     (0.597 → 0.24) and absolute fleet throughput (−25%) collapse."""
-    from dataflow_mm_spark.streaming.cep import (
-        ROCKSDB_PROVIDER,
-        cep_stream_bucketed,
-        cep_stream_tws,
-    )
+    # looked up at call time so perfbench's tracer, which patches the cep
+    # module attribute, sees the call
+    from dataflow_mm_spark.streaming.cep import cep_stream_bucketed
 
     turns = read_transcript_stream(
         spark, input_path, max_files_per_trigger, watermark
     )
-    if variant == "tws":
-        # transformWithStateInPandas requires RocksDB. The provider conf is
-        # captured into the query's offset log AT START, so it can be
-        # restored right after _finish starts the query — leaving it set
-        # would silently run every LATER stateful query in this session on
-        # RocksDB below the measured HDFS/RocksDB crossover (CLAUDE.md,
-        # session.state_store_conf).
-        key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, ROCKSDB_PROVIDER)
-        try:
-            events = cep_stream_tws(turns, close_gap)
-            return _finish(events, out_dir, checkpoint, available_now, sink_mode)
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-    elif bucketed and variant != "perconv":
-        events = cep_stream_bucketed(turns, close_gap, buckets)
-    else:
-        events = cep_stream(turns, close_gap)
+    events = cep_stream_bucketed(turns, close_gap, buckets)
     return _finish(events, out_dir, checkpoint, available_now, sink_mode)
 
 

@@ -69,6 +69,31 @@ def test_merge_spans_capped_nonstring_key(spark):
     assert dict(rows[0].asDict())["user_id"] == 7
 
 
+def test_merge_spans_capped_null_key_bucketed_matches_per_key(spark):
+    """A NULL key is its own group in both modes: the bucketed walk must not
+    drop the rows pandas' groupby would discard by default."""
+    df = spark.createDataFrame(
+        [
+            ("c1", 0.0, 5.0), ("c1", 6.0, 12.0),
+            (None, 0.0, 5.0), (None, 6.0, 10.0), (None, 50.0, 60.0),
+            ("c2", 1.0, 2.0),
+        ],
+        "conv_id string, span_start double, span_end double",
+    )
+
+    def run(**kw):
+        return sorted(
+            (tuple(r) for r in E.merge_spans_capped(df, max_duration=30.0, **kw)
+             .collect()),
+            key=repr,
+        )
+
+    per_key = run()
+    assert (None, 0, 0.0, 10.0, 2) in per_key and (None, 1, 50.0, 60.0, 1) in per_key
+    assert run(group_buckets=4) == per_key
+    assert run(group_buckets=1) == per_key
+
+
 def test_sample_points(spark, spans):
     out = E.sample_points(
         E.explode_spans(spans).filter("conv_id='c1' and span_idx=1"),

@@ -71,47 +71,11 @@ def test_exact_dedup_stream_removes_duplicates(spark, tmp_path):
     assert n == nd > 0
 
 
-import pytest
-
-
-from dataflow_mm_spark.streaming.cep import tws_available
-
-
-@pytest.mark.parametrize(
-    "variant",
-    [
-        "perconv",
-        "bucketed",
-        pytest.param(
-            "tws",
-            marks=pytest.mark.skipif(
-                not tws_available(),
-                reason="transformWithStateInPandas needs the protobuf package "
-                "(absent in this sandbox; path is import-gated — see "
-                "cep.tws_available)",
-            ),
-        ),
-    ],
-    ids=["per-conv", "bucketed", "tws"],
-)
-def test_cep_stream_matches_batch(spark, tmp_path, variant):
+def test_cep_stream_matches_batch(spark, tmp_path):
     inp, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
     df = _write_input(spark, inp, n_convs=60)
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    try:
-        q, sink = jobs.cep_pipeline(
-            spark, inp, out, ckpt, buckets=32, variant=variant
-        )
-        q.awaitTermination(600)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
+    q, sink = jobs.cep_pipeline(spark, inp, out, ckpt, buckets=32)
+    q.awaitTermination(600)
     got = sink.read_committed(spark).filter(F.col("conv_id") != "conv-sentinel")
 
     viol_s = {
@@ -424,8 +388,7 @@ def test_streaming_quality_windows_matches_oracled_batch_query(spark, tmp_path):
     assert got == want and len(want) > 100
 
 
-@pytest.mark.parametrize("bucketed", [False, True], ids=["per-conv", "bucketed"])
-def test_cep_close_then_resume_continues_fsm(spark, tmp_path, bucketed):
+def test_cep_close_then_resume_continues_fsm(spark, tmp_path):
     """Regression (round-2 review): a conversation that RESUMES after its
     close must continue the FSM from its tombstone — cross-gap role
     alternation and post-close detections stay batch-exact, and each activity
@@ -466,8 +429,7 @@ def test_cep_close_then_resume_continues_fsm(spark, tmp_path, bucketed):
 
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
     q, sink = jobs.cep_pipeline(
-        spark, inp, out, ckpt, bucketed=bucketed, buckets=8,
-        max_files_per_trigger=1,
+        spark, inp, out, ckpt, buckets=8, max_files_per_trigger=1,
     )
     q.awaitTermination(600)
     got = sink.read_committed(spark).filter(F.col("conv_id") == "A")
@@ -539,156 +501,96 @@ def test_drain_resumable_restarts_from_checkpoint_once():
     assert calls["n"] == 2 and all(q.stopped for q in hung)
 
 
-# --- transformWithStateInPandas processor glue (runs WITHOUT protobuf) ------
-# The TWS runtime itself needs google.protobuf (absent here — the stream
-# parity param above is skip-gated), but the processor's state pack/unpack,
-# timer-retarget discipline, close/tombstone/retention logic are pure Python:
-# drive them with fakes and pin the behavior to the same FSM semantics the
-# per-conv/bucketed parity tests pin on Spark.
+# --- the conversation FSM without Spark ------------------------------------
+# _conv_step/_conv_close are the one copy of the CEP transition; the Spark
+# parity tests above exercise them through the bucket state, this pins the
+# out-of-order, close and resume rules directly.
 
-class _FakeValueState:
-    def __init__(self):
-        self.v = None
-
-    def exists(self):
-        return self.v is not None
-
-    def get(self):
-        return self.v
-
-    def update(self, v):
-        self.v = tuple(v)
-
-    def clear(self):
-        self.v = None
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.state = _FakeValueState()
-        self.timers = set()
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.state
-
-    def registerTimer(self, ts):
-        self.timers.add(ts)
-
-    def deleteTimer(self, ts):
-        self.timers.discard(ts)
-
-    def listTimers(self):
-        return iter(sorted(self.timers))
-
-
-class _FakeTimerValues:
-    def __init__(self, wm_ms):
-        self._wm = wm_ms
-
-    def getCurrentWatermarkInMs(self):
-        return self._wm
-
-    def getCurrentProcessingTimeInMs(self):
-        return self._wm
-
-
-def _turns_pdf(rows):
+def test_cep_fsm_step_and_close():
     import pandas as pd
 
-    return pd.DataFrame(
-        rows, columns=["turn_idx", "role", "tool", "has_call", "ts"]
-    )
+    from dataflow_mm_spark.streaming.cep import _conv_close, _conv_step
 
-
-def test_cep_tws_processor_glue():
-    import pandas as pd
-
-    from dataflow_mm_spark.streaming.cep import _CepProcessor
-
-    gap_us = 60_000_000  # 1 minute
-    p = _CepProcessor(gap_us)
-    h = _FakeHandle()
-    p.init(h)
-    t0 = pd.Timestamp("2026-01-01 00:00:00")
+    def fresh():
+        return [0, None, None, None, None, {}, 0, 0, 0, 0, 0]
 
     def ts(s):
-        return t0 + pd.Timedelta(seconds=s)
+        return 1_700_000_000_000_000 + s * 1_000_000
 
-    # batch 0: out-of-order arrival (turn 2 before turn 1), open tool call
-    out0 = list(
-        p.handleInputRows(
-            ("c1",),
-            iter([_turns_pdf([
-                (0, "user", None, False, ts(0)),
-                (2, "tool", "search", False, ts(20)),  # buffered (gap)
-                (1, "assistant", "search", True, ts(10)),
-            ])]),
-            _FakeTimerValues(0),
-        )
-    )
-    ev0 = [tuple(r[["conv_id", "kind", "turn_idx"]]) for _, r in out0[0].iterrows()]
-    assert ("c1", "tool_paired", 1) in ev0  # gap filled within the batch
-    assert len(h.timers) == 1  # exactly one live timer
-    (t_close,) = h.timers
-    assert t_close == ts(20).value // 10**6 + 60_000  # last activity + gap
+    def events(out):
+        return [(c, kind, idx) for c, kind, idx, _, _ in out]
 
-    # batch 1: duplicate of a consumed turn is dropped; same-role violation
-    out1 = list(
-        p.handleInputRows(
-            ("c1",),
-            iter([_turns_pdf([
-                (1, "assistant", "search", True, ts(10)),  # stale dup
-                (3, "user", None, False, ts(30)),
-                (4, "user", None, False, ts(40)),  # role violation
-            ])]),
-            _FakeTimerValues(5_000),
-        )
-    )
-    ev1 = [tuple(r[["conv_id", "kind", "turn_idx"]]) for _, r in out1[0].iterrows()]
-    assert ev1 == [("c1", "role_violation", 4)]
-    assert len(h.timers) == 1  # retargeted, old timer deleted
-    (t_close1,) = h.timers
-    assert t_close1 == ts(40).value // 10**6 + 60_000
+    # out-of-order arrival (turn 2 before turn 1) is buffered, then the gap
+    # fills within the batch and the open tool call pairs
+    st, out = fresh(), []
+    _conv_step("c1", st, [
+        (0, "user", None, False, ts(0)),
+        (2, "tool", "search", False, ts(20)),
+        (1, "assistant", "search", True, ts(10)),
+    ], out)
+    assert events(out) == [("c1", "tool_paired", 1)]
+    assert out[0][3] == "search" and out[0][4] == pd.Timestamp(ts(20), unit="us")
+    assert st[0] == 3 and st[5] == {} and st[10] == ts(20)
 
-    # close: watermark passes last activity + gap -> summary emitted,
-    # tombstone kept, retention timer registered
-    wm_close = ts(40).value // 10**6 + 61_000
-    outc = list(
-        p.handleExpiredTimer(("c1",), _FakeTimerValues(wm_close), None)
-    )
-    kinds = [r["kind"] for _, r in outc[0].iterrows()]
-    assert kinds == ["conv_summary"]
-    import json as _json
+    # a stale duplicate of a consumed turn is dropped; same role twice
+    # among user/assistant turns is a violation
+    out = []
+    _conv_step("c1", st, [
+        (1, "assistant", "search", True, ts(10)),
+        (3, "user", None, False, ts(30)),
+        (4, "user", None, False, ts(40)),
+    ], out)
+    assert events(out) == [("c1", "role_violation", 4)]
+    assert st[6] == 5  # the duplicate was not counted
 
-    summary = _json.loads(outc[0].iloc[0]["detail"])
-    assert summary["n_turns"] == 5 and summary["n_violations"] == 1
-    assert summary["n_paired"] == 1 and summary["n_unpaired"] == 0
-    assert h.state.exists()  # tombstone retained
-    assert len(h.timers) == 1  # retention timer
+    # turns 5 and 7 arrive past a gap (3, 4 and 6 never arrive): they wait
+    # in pending and nothing beyond turn 2 is consumed
+    st2, out = fresh(), []
+    _conv_step("c2", st2, [
+        (0, "user", None, False, ts(0)),
+        (1, "assistant", None, False, ts(5)),
+        (2, "user", None, False, ts(10)),
+        (5, "user", None, False, ts(50)),
+        (7, "assistant", "calc", True, ts(70)),
+    ], out)
+    assert out == [] and st2[0] == 3 and sorted(st2[5]) == [5, 7]
 
-    # resume after close: FSM continues (turn 5 'user' vs tombstone
-    # last_ua_role 'user' -> violation), counters restarted
-    out2 = list(
-        p.handleInputRows(
-            ("c1",),
-            iter([_turns_pdf([(5, "user", None, False, ts(100))])]),
-            _FakeTimerValues(wm_close),
-        )
-    )
-    ev2 = [tuple(r[["conv_id", "kind", "turn_idx"]]) for _, r in out2[0].iterrows()]
-    assert ev2 == [("c1", "role_violation", 5)]
+    # close flushes the gapped buffer in turn order (5: user after user is a
+    # violation; 7 opens a call), the call still open resolves unpaired at
+    # its own turn and time, then the summary carries the counters
+    out = []
+    _conv_close("c2", st2, out)
+    assert events(out) == [
+        ("c2", "role_violation", 5),
+        ("c2", "tool_unpaired", 7),
+        ("c2", "conv_summary", 8),
+    ]
+    assert out[1][3] == "calc" and out[1][4] == pd.Timestamp(ts(70), unit="us")
+    assert json.loads(out[2][3]) == {
+        "n_turns": 5, "n_violations": 1, "n_paired": 0, "n_unpaired": 1,
+        "n_pending": 0,
+    }
+    assert out[2][4] == pd.Timestamp(ts(70), unit="us")
 
-    # second close, then retention expiry with watermark far beyond:
-    # state fully removed
-    wm2 = ts(100).value // 10**6 + 61_000
-    list(p.handleExpiredTimer(("c1",), _FakeTimerValues(wm2), None))
-    assert h.state.exists()  # tombstone again
-    wm3 = ts(100).value // 10**6 + 10 * 60_000
-    out3 = list(p.handleExpiredTimer(("c1",), _FakeTimerValues(wm3), None))
-    assert out3 == [] and not h.state.exists()
+    # the close collapsed c2 to a tombstone: counters reset, buffer empty,
+    # next_idx and the last user/assistant role kept
+    assert st2[5] == {} and st2[6:10] == [0, 0, 0, 0]
+    assert st2[0] == 8 and st2[1] == "assistant" and st2[2] is None
 
-    # expired timer for a key with no state is a no-op
-    assert list(p.handleExpiredTimer(("cX",), _FakeTimerValues(wm3), None)) == []
+    # c1's summary counts the pairing and the violation
+    out = []
+    _conv_close("c1", st, out)
+    assert json.loads(out[-1][3]) == {
+        "n_turns": 5, "n_violations": 1, "n_paired": 1, "n_unpaired": 0,
+        "n_pending": 0,
+    }
+
+    # resume from the tombstone: the FSM continues at next_idx, so an
+    # assistant turn after the pre-close assistant is a cross-close violation
+    out = []
+    _conv_step("c2", st2, [(8, "assistant", None, False, ts(5000))], out)
+    assert events(out) == [("c2", "role_violation", 8)]
+    assert st2[0] == 9 and st2[6] == 1 and st2[7] == 1
 
 
 # --- sink snapshots: time travel + compaction (Iceberg-manifest miniature) --
@@ -792,7 +694,7 @@ def test_cep_bucketed_tolerates_null_text(spark, tmp_path):
     """A NULL text (nullable column in real corpora) must not kill the
     bucketed CEP query: rlike(NULL) is NULL and an un-coalesced NULL packed
     meta arrives in pandas as float64 NaN, crashing the vectorized unpack.
-    NULL text behaves as has_call=false (same as the unpacked variants)."""
+    NULL text behaves as has_call=false."""
     inp, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
     base = dt.datetime(2025, 3, 1, 12, 0, 0)
     rows = [

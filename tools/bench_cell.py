@@ -5,7 +5,7 @@ behind bench_scaling.py's protocol, for isolating scaling variables
 Usage:
   python tools/bench_cell.py --input DIR --job enrich_dedup \
       --master local[32] [--heap 48g] [--partitions 32] [--mft 64] \
-      [--provider rocksdb] [--cep per-conv]
+      [--provider rocksdb]
 
 Prints one RESULT json line with sustained tps and the steady-batch
 durationMs / stateOperators breakdown.
@@ -72,8 +72,7 @@ def main() -> None:
         "window": lambda: jobs.windowed_pipeline(
             spark, inp, out, ck, max_files_per_trigger=mft),
         "cep": lambda: jobs.cep_pipeline(
-            spark, inp, out, ck, max_files_per_trigger=mft,
-            bucketed=args.get("cep", "bucketed") == "bucketed"),
+            spark, inp, out, ck, max_files_per_trigger=mft),
         "neardup": lambda: jobs.neardup_pipeline(
             spark, inp, out, ck, max_files_per_trigger=mft,
             # throughput probe: continuous-job configuration (bounded kept

@@ -48,7 +48,7 @@ round 3 to model a real cluster faithfully):
 
 Usage: python tools/bench_scaling.py [n_convs]
          [--repeat N] [--partitions N|auto] [--workdir DIR]
-         [--jobs a,b,c] [--cep bucketed|per-conv] [--mft N] [--no-append]
+         [--jobs a,b,c] [--mft N] [--no-append]
        → prints JSON, appends BENCH.md (unless --no-append)
 """
 
@@ -87,8 +87,7 @@ FNS = {
     "window": lambda o, c: jobs.windowed_pipeline(
         spark, inp, o, c, max_files_per_trigger=MFT),
     "cep": lambda o, c: jobs.cep_pipeline(
-        spark, inp, o, c, max_files_per_trigger=MFT,
-        bucketed=cfg.get("cep_mode", "bucketed") == "bucketed"),
+        spark, inp, o, c, max_files_per_trigger=MFT),
 }
 fn = FNS[name]
 out, ck = os.path.join(work, name + "_out"), os.path.join(work, name + "_ck")
@@ -175,7 +174,6 @@ def parse_args(argv: list[str]) -> dict:
         "partitions": 32,
         "workdir": None,
         "jobs": ALL_JOBS,
-        "cep_mode": "bucketed",
         "mft": 64,
         "append": True,
         "n_convs": 100_000,
@@ -202,8 +200,6 @@ def parse_args(argv: list[str]) -> dict:
             opts["workdir"] = val()
         elif a.startswith("--jobs"):
             opts["jobs"] = val().split(",")
-        elif a.startswith("--cep"):
-            opts["cep_mode"] = val()
         elif a.startswith("--mft"):
             opts["mft"] = int(val())
         elif a.startswith("--heap-per-core"):
@@ -252,7 +248,7 @@ def main() -> None:
                             if o["heap_per_core"] else "8g")
                     cfg = {"master": master, "inp": inp, "work": work,
                            "job": job, "partitions": o["partitions"],
-                           "cep_mode": o["cep_mode"], "mft": o["mft"],
+                           "mft": o["mft"],
                            "heap": heap,
                            "cpuset": f"0-{cores - 1}"
                            if o["limit_cores"] and cores < (os.cpu_count() or 32)
@@ -279,7 +275,7 @@ def main() -> None:
             "wall_efficiency": round((r32["wall_tps"] / r8["wall_tps"]) / 4.0, 3),
         }
     out = {"n_turns": n_turns, "repeat": o["repeat"],
-           "partitions": o["partitions"], "cep_mode": o["cep_mode"],
+           "partitions": o["partitions"],
            "workdir": base or "/tmp", "mft": o["mft"],
            "heap_per_core_gb": o["heap_per_core"], "jobs": eff}
     print(json.dumps(out, indent=2))
@@ -298,7 +294,7 @@ def main() -> None:
             "interference only subtracts); efficiency = "
             "(tp@local[32] / tp@local[8]) / 4; "
             f"{o['partitions'] or 'auto'} shuffle/state partitions at BOTH "
-            f"levels; work dir {base or '/tmp'}; cep mode {o['cep_mode']}.",
+            f"levels; work dir {base or '/tmp'}.",
             "",
             "| job | local[8] turns/s | local[32] turns/s | speedup | efficiency |",
             "|---|---|---|---|---|",
