@@ -18,8 +18,9 @@ ingest enrichment: sniff/sha256/header dims + the reference's video_info
 dict from the real AVI/GIF/MP4 container walks, over a (doc_id, payload)
 binary stream).
 ``--continuous`` keeps the stream
-running with a processing-time trigger; default drains available input and
-exits (availableNow). Re-running with the same --checkpoint resumes from the
+running on Spark's default trigger (the next micro-batch starts as soon as
+the previous one ends); default drains available input and exits
+(availableNow). Re-running with the same --checkpoint resumes from the
 recorded offsets with the exactly-once sink guaranteeing no duplicates.
 ``--est-state-keys`` (with --executors / --executor-heap-gb) selects the
 state-store provider from the measured HDFS/RocksDB crossover
@@ -50,8 +51,8 @@ def main() -> None:
     p.add_argument("--gap", default="30 minutes")
     p.add_argument("--max-files-per-trigger", type=int, default=None)
     p.add_argument("--continuous", action="store_true",
-                   help="processing-time trigger instead of availableNow")
-    p.add_argument("--trigger-interval", default="10 seconds")
+                   help="keep running on Spark's default trigger instead "
+                        "of draining with availableNow")
     p.add_argument("--metrics", default=None, help="progress metrics jsonl path")
     p.add_argument("--no-dedup", action="store_true")
     p.add_argument("--target-partitions", type=int, default=None,

@@ -1,10 +1,11 @@
 """End-to-end streaming jobs — the engine's flagship pipelines.
 
 Each job: readStream → watermark → transform → exactly-once sink, resumable
-from its checkpoint dir. ``trigger='availableNow'`` drains all pending input
-and stops (used by tests + bench); a real deployment passes
-``processing_time='10 seconds'`` instead. Shuffle layout: stateful stages key
-on conv_id (or window key) — Spark plants the exchange. Ordering rule
+from its checkpoint dir. ``available_now=True`` (the default) drains all
+pending input and stops (used by tests + bench); ``available_now=False``
+keeps the query running on Spark's default trigger, which starts the next
+micro-batch as soon as the previous one ends. Shuffle layout: stateful
+stages key on conv_id (or window key) — Spark plants the exchange. Ordering rule
 (measured, see CLAUDE.md): stateful dedup runs FIRST on the 6 narrow raw
 columns (the shuffle carries whatever flows through it — dedup on enriched
 rows measured 2x slower), THEN quality enrichment; in windowed_pipeline the
@@ -26,17 +27,17 @@ from dataflow_mm_spark.streaming.sink import ExactlyOnceParquetSink
 from dataflow_mm_spark.streaming.source import read_transcript_stream
 
 
-def _start(stream_df: DataFrame, sink: ExactlyOnceParquetSink, checkpoint: str,
-           available_now: bool, processing_time: str | None = None):
+def _start(stream_df: DataFrame, batch_fn, checkpoint: str, available_now: bool):
+    """Start a foreachBatch query: ``batch_fn(df, batch_id)`` writes each
+    micro-batch (an ``ExactlyOnceParquetSink.foreach_batch``, possibly
+    behind a per-batch transform)."""
     w = (
         stream_df.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink.foreach_batch)
+        .foreachBatch(batch_fn)
     )
     if available_now:
         w = w.trigger(availableNow=True)
-    elif processing_time:
-        w = w.trigger(processingTime=processing_time)
     return w.start()
 
 
@@ -78,7 +79,7 @@ def _finish(stream_df: DataFrame, out_dir: str, checkpoint: str,
     if sink_mode == "native":
         return _start_native(stream_df, out_dir, checkpoint, available_now), None
     sink = ExactlyOnceParquetSink(out_dir)
-    return _start(stream_df, sink, checkpoint, available_now), sink
+    return _start(stream_df, sink.foreach_batch, checkpoint, available_now), sink
 
 
 def drain_resumable(start, attempts: int = 2, timeout_s: float = 900.0):
@@ -152,7 +153,7 @@ def turns_pipeline(
     )
     filtered = enriched.filter(F.col("quality.pass"))
     sink = ExactlyOnceParquetSink(out_dir)
-    q = _start(filtered, sink, checkpoint, available_now)
+    q = _start(filtered, sink.foreach_batch, checkpoint, available_now)
     return q, sink
 
 
@@ -284,19 +285,14 @@ def neardup_pipeline(
     )
     sink = ExactlyOnceParquetSink(out_dir)
     if resolve:
-        stream = neardup_dedup_stream(turns, **neardup_kw)
-        w = (
-            stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(
-                lambda df, bid: sink.foreach_batch(decisions_from_batch(df), bid)
-            )
+        q = _start(
+            neardup_dedup_stream(turns, **neardup_kw),
+            lambda df, bid: sink.foreach_batch(decisions_from_batch(df), bid),
+            checkpoint, available_now,
         )
-        if available_now:
-            w = w.trigger(availableNow=True)
-        return w.start(), sink
-    cands = neardup_candidates_stream(turns, **neardup_kw)
-    q = _start(cands, sink, checkpoint, available_now)
+    else:
+        q = _start(neardup_candidates_stream(turns, **neardup_kw),
+                   sink.foreach_batch, checkpoint, available_now)
     return q, sink
 
 

@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from dataflow_mm_spark.datagen import transcripts
@@ -30,9 +33,66 @@ def test_datagen_structure(spark, tiny_transcripts, tiny_pdf):
 
 
 def test_every_query_analyzes(spark):
-    """Cheap analysis-only pass over the whole registry: schemas resolve and
-    every oracle has a query."""
+    """Cheap analysis-only pass over the whole registry: schemas resolve."""
     for name, fn in R.QUERIES.items():
         df = fn(spark, "/root/testdata/sf0.001")
         assert len(df.schema.fields) > 0, name
-    assert set(R.ORACLES) <= set(R.QUERIES)
+
+
+def test_registry_table():
+    """GATED and MEMBERS are the registry: 50 gated rows, unique names that
+    never overlap between the tables, and an oracle on every row."""
+    gated = [fn.__name__ for fn, _ in R.GATED]
+    members = [fn.__name__ for fn, _ in R.MEMBERS]
+    assert len(gated) == 50
+    assert len(set(gated + members)) == len(gated) + len(members)
+    assert not set(gated) & set(members)
+    for fn, sql in R.GATED + R.MEMBERS:
+        assert isinstance(sql, str) and sql.strip(), fn.__name__
+    assert list(R.QUERIES) == list(R.ORACLES) == gated
+    assert list(R.MEMBER_QUERIES) == list(R.MEMBER_ORACLES) == members
+
+
+def test_gate_drain_failure_restores_conf_and_removes_work_dir(spark, tmp_path):
+    """A failing pipeline leaves the session's shuffle partitions as they
+    were, removes the drain's work dir, and keeps a caller-owned fixture."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    fixture = str(tmp_path / "in")
+    spark.range(10).write.parquet(fixture)
+    seen = {}
+
+    def pipeline(inp, out, ck):
+        seen.update(inp=inp, work=os.path.dirname(out),
+                    partitions=spark.conf.get(key))
+        raise RuntimeError("pipeline failed")
+
+    spark.conf.set(key, "7")
+    try:
+        with pytest.raises(RuntimeError, match="pipeline failed"):
+            R._gate_drain(spark, fixture, pipeline, lambda sink, out: None)
+        assert seen["partitions"] == "4"  # 10 rows: the clamp floor
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, prev)
+    assert seen["inp"] == fixture and os.path.isdir(fixture)
+    assert not os.path.exists(seen["work"])
+
+
+def test_gate_drain_rows_outlive_work_dir(spark):
+    """The drained rows stay collectable after the work dir is removed."""
+    from dataflow_mm_spark.streaming.jobs import _start_native
+
+    seen = {}
+
+    def pipeline(inp, out, ck):
+        seen["work"] = os.path.dirname(out)
+        stream = spark.readStream.schema("id long").parquet(inp)
+        return _start_native(stream, out, ck, available_now=True), None
+
+    got = R._gate_drain(
+        spark, [spark.range(5), spark.range(5, 10)], pipeline,
+        lambda _sink, out: spark.read.parquet(out),
+    )
+    assert not os.path.exists(seen["work"])
+    assert sorted(r.id for r in got.collect()) == list(range(10))

@@ -721,20 +721,3 @@ def test_cep_bucketed_tolerates_null_text(spark, tmp_path):
     # tool call pairs — the null-text row flowed through as has_call=false
     assert ("role_violation", 2) in kinds
     assert ("tool_paired", 4) in kinds or ("tool_paired", 3) in kinds
-
-
-def test_neardup_state_upgrade_pre_r4_hex():
-    """Pre-r4 checkpoints stored hex signature lists; the state decode must
-    convert them with the 60-bit prefix law (int(hex[:15], 16)) so resumed
-    state keeps matching (r4 ADVICE: silent never-match otherwise)."""
-    from dataflow_mm_spark.streaming.dedup import _upgrade_entries
-
-    hexsig = ["ab" * 16, "0f" * 16]
-    old = [["c1#0", hexsig]]
-    up = _upgrade_entries(old)
-    assert up[0][0] == "c1#0"
-    assert up[0][1] == [int(h[:15], 16) for h in hexsig]
-    # already-migrated int state passes through untouched (same object)
-    new = [["c1#0", [123, 456]]]
-    assert _upgrade_entries(new) is new
-    assert _upgrade_entries([]) == []
