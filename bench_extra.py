@@ -32,64 +32,40 @@ def get_session():
     return get_spark("bench_extra", master=f"local[{CPUS}]")
 
 
-class ProgressTap:
-    """StreamingQueryListener capturing every micro-batch progress JSON."""
-
-    def __init__(self, spark):
-        from pyspark.sql.streaming import StreamingQueryListener
-
-        tap = self
-
-        class L(StreamingQueryListener):
-            def onQueryStarted(self, event):
-                pass
-
-            def onQueryProgress(self, event):
-                tap.events.append(json.loads(event.progress.json))
-
-            def onQueryIdle(self, event):
-                pass
-
-            def onQueryTerminated(self, event):
-                pass
-
-        self.events: list[dict] = []
-        self._l = L()
-        spark.streams.addListener(self._l)
-        self._spark = spark
-
-    def close(self):
-        self._spark.streams.removeListener(self._l)
-
-    def summary(self) -> list[dict]:
-        out = []
-        for p in self.events:
-            d = p.get("durationMs", {})
-            row = {
-                "batchId": p.get("batchId"),
-                "rows": p.get("numInputRows"),
-                "trigger_ms": d.get("triggerExecution"),
-                "addBatch_ms": d.get("addBatch"),
-                "getBatch_ms": d.get("getBatch"),
-                "latestOffset_ms": d.get("latestOffset"),
-                "commitBatch_ms": d.get("commitBatch") or d.get("commitOffsets"),
-                "wmark_ms": d.get("walCommit"),
-            }
-            ops = []
-            for so in p.get("stateOperators", []):
-                ops.append(
-                    {
-                        "op": so.get("operatorName"),
-                        "nkeys": so.get("numRowsTotal"),
-                        "upd_ms": so.get("allUpdatesTimeMs"),
-                        "rm_ms": so.get("allRemovalsTimeMs"),
-                        "commit_ms": so.get("commitTimeMs"),
-                    }
-                )
-            if ops:
-                row["state"] = ops
-            out.append(row)
-        return out
+def summary(path: str) -> list[dict]:
+    """Per-batch phase and state-operator rows from a MetricsListener jsonl."""
+    out = []
+    with open(path) as f:
+        progress = [json.loads(line) for line in f]
+    for p in progress:
+        if "terminated" in p:
+            continue
+        d = p.get("durationMs", {})
+        row = {
+            "batchId": p.get("batchId"),
+            "rows": p.get("numInputRows"),
+            "trigger_ms": d.get("triggerExecution"),
+            "addBatch_ms": d.get("addBatch"),
+            "getBatch_ms": d.get("getBatch"),
+            "latestOffset_ms": d.get("latestOffset"),
+            "commitBatch_ms": d.get("commitBatch") or d.get("commitOffsets"),
+            "wmark_ms": d.get("walCommit"),
+        }
+        ops = []
+        for so in p.get("stateOperators", []):
+            ops.append(
+                {
+                    "op": so.get("operatorName"),
+                    "nkeys": so.get("numRowsTotal"),
+                    "upd_ms": so.get("allUpdatesTimeMs"),
+                    "rm_ms": so.get("allRemovalsTimeMs"),
+                    "commit_ms": so.get("commitTimeMs"),
+                }
+            )
+        if ops:
+            row["state"] = ops
+        out.append(row)
+    return out
 
 
 def cmd_queries(names: list[str], reps: int = 3):
@@ -126,17 +102,24 @@ def cmd_synth():
 
 
 def cmd_stream(name: str):
+    import tempfile
+
     from dataflow_mm_spark.plans import registry as R
+    from dataflow_mm_spark.streaming.sink import MetricsListener
 
     spark = get_session()
-    tap = ProgressTap(spark)
-    t0 = time.time()
-    R.QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-    wall = time.time() - t0
-    time.sleep(1)
-    tap.close()
+    with tempfile.TemporaryDirectory(prefix="dfmm_bx_stream_") as d:
+        path = os.path.join(d, "metrics.jsonl")
+        listener = MetricsListener(path).make()
+        spark.streams.addListener(listener)
+        t0 = time.time()
+        R.QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        wall = time.time() - t0
+        time.sleep(1)
+        spark.streams.removeListener(listener)
+        batches = summary(path) if os.path.exists(path) else []
     print(json.dumps({"query": name, "wall_s": round(wall, 2),
-                      "batches": tap.summary()}, indent=1))
+                      "batches": batches}, indent=1))
 
 
 def cmd_headline(n_convs: int):
@@ -145,6 +128,7 @@ def cmd_headline(n_convs: int):
 
     from dataflow_mm_spark.datagen import write_transcripts
     from dataflow_mm_spark.streaming import jobs
+    from dataflow_mm_spark.streaming.sink import MetricsListener
 
     spark = get_session()
     workdir = tempfile.mkdtemp(prefix="dfmm_bx_head_")
@@ -154,7 +138,9 @@ def cmd_headline(n_convs: int):
         write_transcripts(spark, inp, n_convs=n_convs, files=64)
         print(f"datagen: {time.time() - t0:.2f}s", flush=True)
         n_turns = spark.read.parquet(inp).count()
-        tap = ProgressTap(spark)
+        metrics = os.path.join(workdir, "metrics.jsonl")
+        listener = MetricsListener(metrics).make()
+        spark.streams.addListener(listener)
         out, ckpt = os.path.join(workdir, "o"), os.path.join(workdir, "ck")
         t0 = time.time()
         q, sink = jobs.turns_pipeline(
@@ -163,8 +149,8 @@ def cmd_headline(n_convs: int):
         q.awaitTermination()
         wall = time.time() - t0
         time.sleep(1)
-        tap.close()
-        batches = tap.summary()
+        spark.streams.removeListener(listener)
+        batches = summary(metrics)
         steady = [b for b in batches[1:] if (b["rows"] or 0) > 0]
         tps = (
             sum(b["rows"] for b in steady)

@@ -46,10 +46,6 @@ def extract_tool_result(text: Column) -> Column:
     return F.regexp_extract(text, TOOL_RESULT_PATTERN, 1)
 
 
-def has_answer(text: Column) -> Column:
-    return text.rlike(ANSWER_PATTERN)
-
-
 def parse_qa_blocks(text: Column) -> Column:
     """WikiQARefiner shape (wiki_qa_refiner.py:22-77): parse LLM output with
     a context paragraph and repeated ``Q: .../A: ...`` lines into

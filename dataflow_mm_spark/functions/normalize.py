@@ -2,18 +2,17 @@
 
 Re-expresses the reference's ``normalize`` helper
 (dataflow/operators/core_vision/filter/rule_base_filter.py:35-53: strip
-punctuation, lowercase, collapse whitespace, NFD) and the audio text
-normalizer's punctuation strip
-(dataflow/operators/core_audio/refine/audio_text_normalizer.py:13-17).
+punctuation, lowercase, collapse whitespace; the NFD step is not
+reproduced — exact for ASCII corpora) and the audio transcript
+normalizer's Whisper-EN rule chain and number-word engine
+(dataflow/operators/core_audio/refine/audio_text_normalizer.py).
 
 The ASCII path is pure Spark (translate/lower/regexp_replace —
-whole-stage codegen). NFD unicode normalization has no JVM builtin, so the
-full-fidelity variant is an Arrow-vectorized pandas UDF.
+whole-stage codegen); the number-word engine is an Arrow-vectorized
+pandas UDF.
 """
 
 from __future__ import annotations
-
-import unicodedata
 
 import pandas as pd
 from pyspark.sql import Column
@@ -22,8 +21,6 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 PUNCTUATION = "!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~"
-# audio_text_normalizer.py PUNCS: CJK + latin sentence punctuation
-PUNCS_PATTERN = r'[，。！？；：、“”‘’【】《》（）,.!?;:"\'\[\]<>()]'
 
 
 def normalize_text(text: Column) -> Column:
@@ -35,11 +32,6 @@ def normalize_text(text: Column) -> Column:
     return F.regexp_replace(
         F.regexp_replace(t, r"^\s+|\s+$", ""), r"\s+", " "
     )
-
-
-def strip_puncs(text: Column) -> Column:
-    """Audio-normalizer punctuation removal (PUNCS regex)."""
-    return F.regexp_replace(text, PUNCS_PATTERN, "")
 
 
 # Whisper-style English text normalization — the deterministic rule subset of
@@ -432,12 +424,6 @@ def number_words_to_digits(texts: pd.Series) -> pd.Series:
     return texts.map(number_words_to_digits_py)
 
 
-def whisper_en_normalize_full(text: Column) -> Column:
-    """Whisper-EN rule chain + number-word engine (the closest full
-    analogue of the reference's EnglishTextNormalizer this engine ships)."""
-    return number_words_to_digits(whisper_en_normalize(text))
-
-
 def whisper_en_normalize_py(text: str) -> str:
     """Pinned pure-Python oracle for the hypothesis parity suite."""
     import re
@@ -456,18 +442,3 @@ def whisper_en_normalize_sql(expr: str) -> str:
         r = rep.replace("'", "''")
         t = f"regexp_replace({t}, '{p}', '{r}', 'g')"
     return f"trim({t})"
-
-
-@pandas_udf(T.StringType())
-def normalize_text_nfd(texts: pd.Series) -> pd.Series:
-    """Full-fidelity normalize incl. NFD (Arrow-batched, vectorized)."""
-    table = str.maketrans("", "", PUNCTUATION)
-
-    def norm(t: str | None) -> str | None:
-        if t is None:
-            return None
-        t = t.translate(table).lower().strip()
-        t = " ".join(t.split())
-        return unicodedata.normalize("NFD", t)
-
-    return texts.map(norm)

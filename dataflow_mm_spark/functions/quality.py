@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dataflow_mm_spark.functions.normalize import PUNCTUATION
+
 # ---- constants mirrored from the reference (rule_base_filter.py:163-203) ----
 
 ELLIPSIS_THRESHOLD = 0.3
@@ -46,8 +48,6 @@ HTML_ENTITY_PATTERN = (
 WATERMARK_PATTERN = r"Copyright|Watermark|Confidential"
 BULLET_CHARS = "•‣▶◀◦■□▪▫–"
 SENTENCE_SPLIT = r"[–.!?,;•/|…]"
-# string.punctuation, escaped for use inside F.translate (literal chars).
-PUNCTUATION = "!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~"
 
 
 def _count(col: Column, token: str) -> Column:

@@ -1,11 +1,13 @@
 """Windowed segmentation over event time.
 
 Reference analogues (SURVEY.md §2.7): VideoSceneFilter's fixed-interval split
-(video_scene_filter.py:259-293 → tumbling), overlap split (:206-256 → sliding)
-and content-boundary split (:119-152 → session); SileroVAD gap detection
+(video_scene_filter.py:259-293 → tumbling) and content-boundary split
+(:119-152 → session); SileroVAD gap detection
 (audio_silero...generator.py:262-289 → session); TimestampChunkRowGenerator
 merge mode (audio_timestamp_chunk_row_generator.py:29-55 → size-capped
-session, see operators/expansion.py).
+session, see operators/expansion.py).  The overlap split (:206-256 →
+sliding) is a plain ``F.window(ts, size, slide)`` group-by; the gated form
+is plans/registry.events_sliding_windows.
 
 All functions work on both batch and streaming DataFrames. ``session_agg``
 uses Spark's native ``session_window`` — for an oracle-matchable batch
@@ -39,22 +41,6 @@ def tumbling_agg(
         F.col("w.start").alias("win_start"),
         F.col("w.end").alias("win_end"),
         *rest,
-    )
-
-
-def sliding_agg(
-    df: DataFrame,
-    size: str = "10 minutes",
-    slide: str = "5 minutes",
-    keys: tuple[str, ...] = ("conv_id",),
-    ts_col: str = "ts",
-) -> DataFrame:
-    g = df.groupBy(*keys, F.window(ts_col, size, slide).alias("w"))
-    return g.agg(F.count("*").alias("n_turns")).select(
-        *keys,
-        F.col("w.start").alias("win_start"),
-        F.col("w.end").alias("win_end"),
-        "n_turns",
     )
 
 
@@ -120,20 +106,3 @@ def session_agg_batch(
             ),
         )
     )
-
-
-def window_duration_filter(
-    df: DataFrame,
-    min_seconds: int | None = None,
-    max_seconds: int | None = None,
-    start_col: str = "sess_start",
-    end_col: str = "sess_last",
-) -> DataFrame:
-    """Min/max duration constraint post-filter (VideoSceneFilter's
-    [min_seconds, max_seconds] chunk rule)."""
-    dur = F.unix_timestamp(end_col) - F.unix_timestamp(start_col)
-    if min_seconds is not None:
-        df = df.filter(dur >= min_seconds)
-    if max_seconds is not None:
-        df = df.filter(dur <= max_seconds)
-    return df

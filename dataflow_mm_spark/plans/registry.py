@@ -10,7 +10,10 @@ end of this module: ``GATED`` (the 50 queries the driver contract exposes)
 and ``MEMBERS`` (the single-kernel queries folded into GATED's suites). A
 query's name is its builder's ``__name__``; ``QUERIES``/``ORACLES`` and
 ``MEMBER_QUERIES``/``MEMBER_ORACLES`` are name-keyed views of the two
-tables. The nine streaming gates share one drain harness, ``_gate_drain``.
+tables. Eight of GATED's suites are union suites: one SQL text each in
+``SUITES``, run by Spark over the member DataFrames and by DuckDB over the
+member oracles (``_suite``). The nine streaming gates share one drain
+harness, ``_gate_drain``.
 
 The function-table registry deliberately replaces the reference's
 OPERATOR_REGISTRY/LazyLoader machinery (dataflow/utils/registry.py) — in a
@@ -19,6 +22,7 @@ lazy DataFrame engine, an operator *is* a function.
 
 from __future__ import annotations
 
+import string
 from collections.abc import Callable
 
 import pandas as pd
@@ -2738,47 +2742,6 @@ FROM t
 """
 
 
-def events_audio_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio real-kernel family under one gate row (members:
-    events_ctc_align A2 Viterbi forced alignment / events_wav_vad W5 WAV
-    decode + VAD timestamp FSM). Column harmonization (union-suite dtype
-    rule): c1/c2/c3 carry (token, start_frame, end_frame) for ctc and
-    (start_sample, end_sample, n_windows) for vad; score is the ctc span
-    score, literal 1.0 for vad."""
-    ca = events_ctc_align(spark, sf_dir).select(
-        F.lit("ctc_align").alias("family"), "event_id",
-        F.col("tok_idx").alias("idx"),
-        F.col("token").cast("bigint").alias("c1"),
-        F.col("start_frame").cast("bigint").alias("c2"),
-        F.col("end_frame").cast("bigint").alias("c3"),
-        "start_ms", "end_ms",
-        F.col("score").cast("double").alias("score"),
-    )
-    wv = events_wav_vad(spark, sf_dir).select(
-        F.lit("wav_vad").alias("family"), "event_id",
-        F.col("span_idx").alias("idx"),
-        F.col("start_sample").alias("c1"),
-        F.col("end_sample").alias("c2"),
-        F.col("n_windows").alias("c3"),
-        "start_ms", "end_ms",
-        F.lit(1.0).alias("score"),
-    )
-    return ca.unionByName(wv)
-
-
-EVENTS_AUDIO_SUITE_SQL = f"""
-SELECT 'ctc_align' AS family, event_id, tok_idx AS idx,
-       CAST(token AS BIGINT) AS c1, CAST(start_frame AS BIGINT) AS c2,
-       CAST(end_frame AS BIGINT) AS c3, start_ms, end_ms,
-       CAST(score AS DOUBLE) AS score
-FROM ({EVENTS_CTC_ALIGN_SQL})
-UNION ALL
-SELECT 'wav_vad', event_id, span_idx, start_sample, end_sample, n_windows,
-       start_ms, end_ms, CAST(1.0 AS DOUBLE)
-FROM ({EVENTS_WAV_VAD_SQL})
-"""
-
-
 def docs_bmp_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P7/G-modality real pixel path under the gate
     (vision_seg_cutout_refiner.py:44-72 analogue, mask application + codecs
@@ -2831,6 +2794,7 @@ def docs_bmp_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_avi_mjpeg,
         video_frame_stats,
     )
+    from dataflow_mm_spark.plans.fixture_codec import lzw_encode, png_forward_filter
 
     # single-file scan = one task; the per-pixel Python codec encoders and
     # every downstream Python pass (seg_cutout, stats, video walk) inherit
@@ -2840,36 +2804,10 @@ def docs_bmp_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _png_forward(rgb: "np.ndarray") -> bytes:
-        # independent forward filtering (Filt = Raw - predictor), cycling
-        # filter types per row; decode_png owns the inverse direction
+        # forward filtering cycles all five filter types per row;
+        # decode_png owns the inverse direction
         h, w = rgb.shape[:2]
-        raw_rows = rgb.reshape(h, w * 3)
-        out = bytearray()
-        prior = bytes(w * 3)
-        for y in range(h):
-            row = raw_rows[y].tobytes()
-            ft = y % 5
-            out.append(ft)
-            for x in range(w * 3):
-                rv = row[x]
-                a = row[x - 3] if x >= 3 else 0
-                bb = prior[x]
-                c = prior[x - 3] if x >= 3 else 0
-                if ft == 0:
-                    v = rv
-                elif ft == 1:
-                    v = (rv - a) & 0xFF
-                elif ft == 2:
-                    v = (rv - bb) & 0xFF
-                elif ft == 3:
-                    v = (rv - ((a + bb) >> 1)) & 0xFF
-                else:
-                    p = a + bb - c
-                    pa, pb_, pc = abs(p - a), abs(p - bb), abs(p - c)
-                    pred = a if (pa <= pb_ and pa <= pc) else (bb if pb_ <= pc else c)
-                    v = (rv - pred) & 0xFF
-                out.append(v)
-            prior = row
+        idat = zlib.compress(png_forward_filter(rgb.reshape(h, w * 3), 3))
 
         def chunk(typ: bytes, data: bytes) -> bytes:
             return (
@@ -2881,12 +2819,12 @@ def docs_bmp_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             b"\x89PNG\r\n\x1a\n"
             + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(out)))
+            + chunk(b"IDAT", idat)
             + chunk(b"IEND", b"")
         )
 
     def _gif_image_block(rgb: "np.ndarray", interlace: bool) -> bytes:
-        # independent dict-based LZW encoder; decode_gif owns the decoder.
+        # fixture-side LZW encoder; decode_gif owns the decoder.
         # ≤224 px/image → every image fits one local 256-color palette.
         h, w = rgb.shape[:2]
         flatpx = rgb.reshape(-1, 3)
@@ -2895,7 +2833,6 @@ def docs_bmp_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
         full = np.zeros((1 << bits, 3), dtype=np.uint8)
         full[: pal.shape[0]] = pal
         mcs = max(2, bits)
-        clear, eoi = 1 << mcs, (1 << mcs) + 1
         rows_idx = idx.reshape(h, w)
         if interlace:
             order = np.concatenate(
@@ -2903,37 +2840,7 @@ def docs_bmp_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
                  np.arange(2, h, 4), np.arange(1, h, 2)]
             )
             rows_idx = rows_idx[order]
-        seq_in = rows_idx.reshape(-1).astype(int).tolist()
-        d = {bytes([i]): i for i in range(1 << mcs)}
-        next_code, width = eoi + 1, mcs + 1
-        bitbuf: list[int] = []
-
-        def emit(code: int, wdt: int) -> None:
-            for i in range(wdt):
-                bitbuf.append((code >> i) & 1)
-
-        emit(clear, width)
-        seq = bytes([seq_in[0]])
-        for k in seq_in[1:]:
-            cand = seq + bytes([k])
-            if cand in d:
-                seq = cand
-                continue
-            emit(d[seq], width)
-            if next_code < 4096:
-                d[cand] = next_code
-                next_code += 1
-                if next_code == (1 << width) + 1 and width < 12:
-                    width += 1
-            seq = bytes([k])
-        emit(d[seq], width)
-        emit(eoi, width)
-        enc = bytearray()
-        for i in range(0, len(bitbuf), 8):
-            byte = 0
-            for j, bit in enumerate(bitbuf[i : i + 8]):
-                byte |= bit << j
-            enc.append(byte)
+        enc = lzw_encode(rows_idx.reshape(-1).astype(int).tolist(), mcs)
         blocks = bytearray([mcs])
         for i in range(0, len(enc), 255):
             part = enc[i : i + 255]
@@ -3991,14 +3898,16 @@ SELECT row_key, bool_or(dup_local) AS dup FROM d GROUP BY row_key
 # ---------------------------------------------------------------------------
 # Consolidated gate suites (r4 judge #2): the driver's correctness record
 # caps at 50 registry entries, so mature single-kernel queries are grouped
-# into multi-member suites — union-with-family-tag (or one multi-column
-# scan) on the Spark side, UNION ALL of the member oracles on the DuckDB
-# side. Every member function and member SQL remains defined and
-# individually runnable above (tools/check_correctness.py takes explicit
-# query names); a suite hash flips if ANY member row changes, so per-
-# operator value coverage is preserved while the whole registry fits the
-# driver's witnessed window. Nullable numeric columns are cast to DOUBLE
-# on BOTH sides (CLAUDE.md dtype trap: nullable ints fetch as float64).
+# into multi-member suites.  Most are union suites (``SUITES`` below): one
+# family-tagged ``UNION ALL`` text that both engines run over the member
+# queries' outputs.  Two suites keep hand-written sides:
+# ``docs_text_analysis`` (one multi-column scan on the Spark side) and
+# ``transcripts_contract_suite`` (its oracle materializes the synth CTE
+# once).  Every member function and member SQL remains defined and
+# individually runnable (tools/check_correctness.py takes explicit query
+# names); a suite hash flips if ANY member row changes, so per-operator
+# value coverage is preserved while the whole registry fits the driver's
+# witnessed window.
 # ---------------------------------------------------------------------------
 
 
@@ -4025,217 +3934,6 @@ FROM ({DOCS_LANG_SQL}) l
 JOIN ({DOCS_TOKEN_SQL}) t USING (doc_id)
 JOIN ({DOCS_SCORE_SQL}) s USING (doc_id)
 JOIN ({DOCS_FP_SQL}) f USING (doc_id)
-"""
-
-
-def docs_normalize_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P3 TextNormalizer engines + P2 FunctionalRefiner under one gate row
-    (members: docs_whisper_normalize / docs_number_words / docs_cn_numbers
-    / docs_cn_textnorm / docs_functional_refine), family-tagged union —
-    all five emit (doc_id, norm) text."""
-    parts = [
-        docs_whisper_normalize(spark, sf_dir).withColumn(
-            "family", F.lit("whisper")),
-        docs_number_words(spark, sf_dir).withColumn(
-            "family", F.lit("numwords")),
-        docs_cn_numbers(spark, sf_dir).withColumn(
-            "family", F.lit("cn_numbers")),
-        docs_cn_textnorm(spark, sf_dir).withColumn(
-            "family", F.lit("cn_textnorm")),
-        docs_functional_refine(spark, sf_dir)
-        .withColumnRenamed("refined", "norm")
-        .withColumn("family", F.lit("refine")),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select("family", "doc_id", "norm")
-
-
-DOCS_NORMALIZE_SUITE_SQL = f"""
-SELECT 'whisper' AS family, doc_id, norm FROM ({DOCS_WHISPER_SQL})
-UNION ALL SELECT 'numwords', doc_id, norm FROM ({DOCS_NUMWORD_SQL})
-UNION ALL SELECT 'cn_numbers', doc_id, norm FROM ({DOCS_CN_SQL})
-UNION ALL SELECT 'cn_textnorm', doc_id, norm FROM ({DOCS_CN_TEXTNORM_SQL})
-UNION ALL SELECT 'refine', doc_id, refined AS norm
-  FROM ({DOCS_FUNCTIONAL_REFINE_SQL})
-"""
-
-
-def events_windows_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1's three batch window kinds under one gate row (members:
-    events_tumbling_hourly / events_sliding_windows /
-    events_sessionization), family-tagged union on a common
-    (grp, t0, n_events, metric) shape."""
-    tb = events_tumbling_hourly(spark, sf_dir).select(
-        F.lit("tumbling").alias("family"),
-        F.col("event_type").alias("grp"),
-        F.col("win_start").alias("t0"),
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("sum_value").cast("double").alias("metric"),
-    )
-    sl = events_sliding_windows(spark, sf_dir).select(
-        F.lit("sliding").alias("family"),
-        F.col("event_type").alias("grp"),
-        F.col("win_start").alias("t0"),
-        F.col("n_events").cast("long").alias("n_events"),
-        F.lit(None).cast("double").alias("metric"),
-    )
-    se = events_sessionization(spark, sf_dir).select(
-        F.lit("session").alias("family"),
-        F.col("user_id").cast("string").alias("grp"),
-        F.col("sess_start").alias("t0"),
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("duration_sec").cast("double").alias("metric"),
-    )
-    return tb.unionByName(sl).unionByName(se)
-
-
-EVENTS_WINDOWS_SUITE_SQL = f"""
-SELECT 'tumbling' AS family, event_type AS grp, win_start AS t0,
-       CAST(n_events AS BIGINT) AS n_events,
-       CAST(sum_value AS DOUBLE) AS metric
-FROM ({EVENTS_TUMBLING_SQL})
-UNION ALL
-SELECT 'sliding', event_type, win_start,
-       CAST(n_events AS BIGINT), CAST(NULL AS DOUBLE)
-FROM ({EVENTS_SLIDING_SQL})
-UNION ALL
-SELECT 'session', CAST(user_id AS VARCHAR), sess_start,
-       CAST(n_events AS BIGINT), CAST(duration_sec AS DOUBLE)
-FROM ({EVENTS_SESSION_SQL})
-"""
-
-
-def events_expansion_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W2/W3 clip flatten + W4 frame sampling under one gate row (members:
-    events_explode_spans / events_frame_samples)."""
-    ex = events_explode_spans(spark, sf_dir).select(
-        F.lit("explode").alias("family"),
-        "event_id",
-        F.col("user_id").cast("double").alias("user_id"),
-        F.col("span_idx").cast("double").alias("span_idx"),
-        "span_start",
-        "span_end",
-        F.lit(None).cast("double").alias("sample_t"),
-    )
-    fr = events_frame_samples(spark, sf_dir).select(
-        F.lit("frames").alias("family"),
-        "event_id",
-        F.lit(None).cast("double").alias("user_id"),
-        F.lit(None).cast("double").alias("span_idx"),
-        "span_start",
-        "span_end",
-        "sample_t",
-    )
-    return ex.unionByName(fr)
-
-
-EVENTS_EXPANSION_SUITE_SQL = f"""
-SELECT 'explode' AS family, event_id, CAST(user_id AS DOUBLE) AS user_id,
-       CAST(span_idx AS DOUBLE) AS span_idx, span_start, span_end,
-       CAST(NULL AS DOUBLE) AS sample_t
-FROM ({EVENTS_EXPLODE_SPANS_SQL})
-UNION ALL
-SELECT 'frames', event_id, CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-       span_start, span_end, sample_t
-FROM ({EVENTS_FRAME_SAMPLES_SQL})
-"""
-
-
-def events_clip_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event scoring/filter kernels under one gate row (members:
-    events_clip_filter F6 / events_span_filter A3 / events_clip_eval A4-A6
-    / events_motion_score F5 / events_timecodes §2.11), family-tagged on a
-    common (k1, k2, n, v, s) shape; nullable numerics as DOUBLE."""
-    nd = F.lit(None).cast("double")
-    ns = F.lit(None).cast("string")
-    cf = events_clip_filter(spark, sf_dir).select(
-        F.lit("clip_filter").alias("family"),
-        F.col("event_id").alias("k1"), nd.alias("k2"),
-        F.col("n_kept").cast("double").alias("n"),
-        F.col("sum_kept_score").cast("double").alias("v"),
-        ns.alias("s"),
-    )
-    sp = events_span_filter(spark, sf_dir).select(
-        F.lit("span_filter").alias("family"),
-        F.col("event_id").alias("k1"),
-        F.col("user_id").cast("double").alias("k2"),
-        nd.alias("n"), nd.alias("v"), ns.alias("s"),
-    )
-    ce = events_clip_eval(spark, sf_dir).select(
-        F.lit("clip_eval").alias("family"),
-        F.col("event_id").alias("k1"), nd.alias("k2"),
-        F.col("n_clips").cast("double").alias("n"),
-        F.col("avg_clip_score").cast("double").alias("v"),
-        ns.alias("s"),
-    )
-    mo = events_motion_score(spark, sf_dir).select(
-        F.lit("motion").alias("family"),
-        F.col("user_id").alias("k1"), nd.alias("k2"),
-        F.col("n_steps").cast("double").alias("n"),
-        F.col("motion_score").cast("double").alias("v"),
-        ns.alias("s"),
-    )
-    tc = events_timecodes(spark, sf_dir).select(
-        F.lit("timecodes").alias("family"),
-        F.col("event_id").alias("k1"), nd.alias("k2"),
-        F.col("ms_total").cast("double").alias("n"),
-        F.col("frame25").cast("double").alias("v"),
-        F.concat_ws("|", "tc", "tc_roundtrip").alias("s"),
-    )
-    return cf.unionByName(sp).unionByName(ce).unionByName(mo).unionByName(tc)
-
-
-EVENTS_CLIP_SUITE_SQL = f"""
-SELECT 'clip_filter' AS family, event_id AS k1, CAST(NULL AS DOUBLE) AS k2,
-       CAST(n_kept AS DOUBLE) AS n, CAST(sum_kept_score AS DOUBLE) AS v,
-       CAST(NULL AS VARCHAR) AS s
-FROM ({EVENTS_CLIP_FILTER_SQL})
-UNION ALL
-SELECT 'span_filter', event_id, CAST(user_id AS DOUBLE),
-       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS VARCHAR)
-FROM ({EVENTS_SPAN_FILTER_SQL})
-UNION ALL
-SELECT 'clip_eval', event_id, CAST(NULL AS DOUBLE),
-       CAST(n_clips AS DOUBLE), CAST(avg_clip_score AS DOUBLE),
-       CAST(NULL AS VARCHAR)
-FROM ({EVENTS_CLIP_EVAL_SQL})
-UNION ALL
-SELECT 'motion', user_id, CAST(NULL AS DOUBLE),
-       CAST(n_steps AS DOUBLE), CAST(motion_score AS DOUBLE),
-       CAST(NULL AS VARCHAR)
-FROM ({EVENTS_MOTION_SCORE_SQL})
-UNION ALL
-SELECT 'timecodes', event_id, CAST(NULL AS DOUBLE),
-       CAST(ms_total AS DOUBLE), CAST(frame25 AS DOUBLE),
-       tc || '|' || tc_roundtrip
-FROM ({EVENTS_TIMECODES_SQL})
-"""
-
-
-def docs_eval_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 answer-reward + BLEU kernels under one gate row (members:
-    docs_reward_eval / docs_bleu_eval), pins from the independent
-    oracles/metric_oracle.py on both sides."""
-    rw = docs_reward_eval(spark, sf_dir).select(
-        F.lit("reward").alias("family"), "doc_id", "question_type",
-        F.col("reward").alias("metric"),
-    )
-    bl = docs_bleu_eval(spark, sf_dir).select(
-        F.lit("bleu").alias("family"), "doc_id",
-        F.lit(None).cast("string").alias("question_type"),
-        F.col("bleu").alias("metric"),
-    )
-    return rw.unionByName(bl)
-
-
-DOCS_EVAL_SUITE_SQL = f"""
-SELECT 'reward' AS family, doc_id, question_type, reward AS metric
-FROM ({DOCS_REWARD_SQL})
-UNION ALL
-SELECT 'bleu', doc_id, CAST(NULL AS VARCHAR), bleu
-FROM ({DOCS_BLEU_SQL})
 """
 
 
@@ -4301,36 +3999,6 @@ FROM calls
 """
 
 
-def docs_parse_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P4 QA parse + G2/G5 templated prompts under one gate row (members:
-    docs_qa_parse / docs_templated_prompts)."""
-    qa = docs_qa_parse(spark, sf_dir).select(
-        F.lit("qa_parse").alias("family"), "doc_id",
-        F.col("qa_idx").cast("double").alias("qa_idx"),
-        F.col("context").alias("s1"), F.col("question").alias("s2"),
-        F.col("answer").alias("s3"),
-    )
-    tp = docs_templated_prompts(spark, sf_dir).select(
-        F.lit("templated").alias("family"), "doc_id",
-        F.lit(None).cast("double").alias("qa_idx"),
-        F.col("prompt").alias("s1"),
-        F.lit(None).cast("string").alias("s2"),
-        F.lit(None).cast("string").alias("s3"),
-    )
-    return qa.unionByName(tp)
-
-
-DOCS_PARSE_SUITE_SQL = f"""
-SELECT 'qa_parse' AS family, doc_id, CAST(qa_idx AS DOUBLE) AS qa_idx,
-       context AS s1, question AS s2, answer AS s3
-FROM ({DOCS_QA_PARSE_SQL})
-UNION ALL
-SELECT 'templated', doc_id, CAST(NULL AS DOUBLE), prompt,
-       CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
-FROM ({DOCS_TEMPLATED_SQL})
-"""
-
-
 def docs_aesthetic_mlp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3 aesthetic-predictor HEAD for real (suite member): the reference's
     MLP regression head (video_aesthetic_evaluator.py:78-97, thresholded by
@@ -4373,119 +4041,145 @@ SELECT doc_id, score, score >= 0 AS keep FROM s
 """
 
 
-def docs_filter_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Score-threshold filter family under one gate row (members:
-    docs_score_filter F2 / docs_keep_top_ratio D6 / docs_clip_score_filter
-    F7-F12 serving shape / docs_aesthetic_mlp F3 real MLP head)."""
-    sf_ = docs_score_filter(spark, sf_dir).select(
-        F.lit("score_filter").alias("family"), "doc_id",
-        F.col("score").cast("double").alias("score"),
-        F.col("select").alias("keep"),
-    )
-    kt = docs_keep_top_ratio(spark, sf_dir).select(
-        F.lit("keep_top").alias("family"), "doc_id",
-        F.col("score").cast("double").alias("score"),
-        F.lit(True).alias("keep"),
-    )
-    cs = docs_clip_score_filter(spark, sf_dir).select(
-        F.lit("clip_score").alias("family"), "doc_id",
-        F.col("clip_score").cast("double").alias("score"),
-        F.lit(True).alias("keep"),
-    )
-    am = docs_aesthetic_mlp(spark, sf_dir).select(
-        F.lit("aesthetic_mlp").alias("family"), "doc_id",
-        F.col("score").cast("double").alias("score"),
-        F.col("keep"),
-    )
-    return sf_.unionByName(kt).unionByName(cs).unionByName(am)
-
-
-DOCS_FILTER_SUITE_SQL = f"""
+# Union suites: one SQL text per suite, run by BOTH engines.  Each
+# ``{member}`` placeholder names a MEMBERS row; DuckDB reads it as that
+# member's oracle SQL, Spark as that member's DataFrame (``_suite``).  So
+# every CAST serves both sides (nullable numerics are DOUBLE: nullable ints
+# fetch as float64 from DuckDB) and the texts stick to the SQL both
+# dialects share: STRING, BIGINT, concat_ws, qualified ``m.select``.
+SUITES: dict[str, str] = {
+    # A2 Viterbi forced alignment + W5 WAV decode / VAD timestamp FSM:
+    # c1/c2/c3 carry (token, start_frame, end_frame) for ctc and
+    # (start_sample, end_sample, n_windows) for vad; score is the ctc span
+    # score, literal 1.0 for vad.
+    "events_audio_suite": """
+SELECT 'ctc_align' AS family, event_id, tok_idx AS idx,
+       CAST(token AS BIGINT) AS c1, CAST(start_frame AS BIGINT) AS c2,
+       CAST(end_frame AS BIGINT) AS c3, start_ms, end_ms,
+       CAST(score AS DOUBLE) AS score
+FROM {events_ctc_align}
+UNION ALL
+SELECT 'wav_vad', event_id, span_idx, start_sample, end_sample, n_windows,
+       start_ms, end_ms, CAST(1.0 AS DOUBLE)
+FROM {events_wav_vad}
+""",
+    # P3 TextNormalizer engines + P2 FunctionalRefiner: all five emit
+    # (doc_id, norm) text.
+    "docs_normalize_suite": """
+SELECT 'whisper' AS family, doc_id, norm FROM {docs_whisper_normalize}
+UNION ALL SELECT 'numwords', doc_id, norm FROM {docs_number_words}
+UNION ALL SELECT 'cn_numbers', doc_id, norm FROM {docs_cn_numbers}
+UNION ALL SELECT 'cn_textnorm', doc_id, norm FROM {docs_cn_textnorm}
+UNION ALL SELECT 'refine', doc_id, refined FROM {docs_functional_refine}
+""",
+    # W1's three batch window kinds on a common (grp, t0, n_events, metric)
+    # shape.
+    "events_windows_suite": """
+SELECT 'tumbling' AS family, event_type AS grp, win_start AS t0,
+       CAST(n_events AS BIGINT) AS n_events,
+       CAST(sum_value AS DOUBLE) AS metric
+FROM {events_tumbling_hourly}
+UNION ALL
+SELECT 'sliding', event_type, win_start,
+       CAST(n_events AS BIGINT), CAST(NULL AS DOUBLE)
+FROM {events_sliding_windows}
+UNION ALL
+SELECT 'session', CAST(user_id AS STRING), sess_start,
+       CAST(n_events AS BIGINT), CAST(duration_sec AS DOUBLE)
+FROM {events_sessionization}
+""",
+    # W2/W3 clip flatten + W4 frame sampling.
+    "events_expansion_suite": """
+SELECT 'explode' AS family, event_id, CAST(user_id AS DOUBLE) AS user_id,
+       CAST(span_idx AS DOUBLE) AS span_idx, span_start, span_end,
+       CAST(NULL AS DOUBLE) AS sample_t
+FROM {events_explode_spans}
+UNION ALL
+SELECT 'frames', event_id, CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
+       span_start, span_end, sample_t
+FROM {events_frame_samples}
+""",
+    # Per-event scoring/filter kernels (F6 clip filter / A3 span filter /
+    # A4-A6 clip eval / F5 motion score / §2.11 timecodes) on a common
+    # (k1, k2, n, v, s) shape.
+    "events_clip_suite": """
+SELECT 'clip_filter' AS family, event_id AS k1, CAST(NULL AS DOUBLE) AS k2,
+       CAST(n_kept AS DOUBLE) AS n, CAST(sum_kept_score AS DOUBLE) AS v,
+       CAST(NULL AS STRING) AS s
+FROM {events_clip_filter}
+UNION ALL
+SELECT 'span_filter', event_id, CAST(user_id AS DOUBLE),
+       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS STRING)
+FROM {events_span_filter}
+UNION ALL
+SELECT 'clip_eval', event_id, CAST(NULL AS DOUBLE),
+       CAST(n_clips AS DOUBLE), CAST(avg_clip_score AS DOUBLE),
+       CAST(NULL AS STRING)
+FROM {events_clip_eval}
+UNION ALL
+SELECT 'motion', user_id, CAST(NULL AS DOUBLE),
+       CAST(n_steps AS DOUBLE), CAST(motion_score AS DOUBLE),
+       CAST(NULL AS STRING)
+FROM {events_motion_score}
+UNION ALL
+SELECT 'timecodes', event_id, CAST(NULL AS DOUBLE),
+       CAST(ms_total AS DOUBLE), CAST(frame25 AS DOUBLE),
+       concat_ws('|', tc, tc_roundtrip)
+FROM {events_timecodes}
+""",
+    # A1 answer reward + BLEU, pinned from the independent
+    # oracles/metric_oracle.py on both sides.
+    "docs_eval_suite": """
+SELECT 'reward' AS family, doc_id, question_type, reward AS metric
+FROM {docs_reward_eval}
+UNION ALL
+SELECT 'bleu', doc_id, CAST(NULL AS STRING), bleu
+FROM {docs_bleu_eval}
+""",
+    # P4 QA parse + G2/G5 templated prompts.
+    "docs_parse_suite": """
+SELECT 'qa_parse' AS family, doc_id, CAST(qa_idx AS DOUBLE) AS qa_idx,
+       context AS s1, question AS s2, answer AS s3
+FROM {docs_qa_parse}
+UNION ALL
+SELECT 'templated', doc_id, CAST(NULL AS DOUBLE), prompt,
+       CAST(NULL AS STRING), CAST(NULL AS STRING)
+FROM {docs_templated_prompts}
+""",
+    # Score-threshold filters: F2 score filter / D6 keep-top ratio / F7-F12
+    # clip-score serving shape / F3 real MLP head.
+    "docs_filter_suite": """
 SELECT 'score_filter' AS family, doc_id, CAST(score AS DOUBLE) AS score,
-       "select" AS keep
-FROM ({DOCS_SCORE_FILTER_SQL})
+       m.select AS keep
+FROM {docs_score_filter} m
 UNION ALL
 SELECT 'keep_top', doc_id, CAST(score AS DOUBLE), TRUE
-FROM ({DOCS_KEEP_TOP_SQL})
+FROM {docs_keep_top_ratio}
 UNION ALL
 SELECT 'clip_score', doc_id, CAST(clip_score AS DOUBLE), TRUE
-FROM ({DOCS_CLIP_SCORE_SQL})
+FROM {docs_clip_score_filter}
 UNION ALL
 SELECT 'aesthetic_mlp', doc_id, CAST(score AS DOUBLE), keep
-FROM ({DOCS_AESTHETIC_MLP_SQL})
-"""
+FROM {docs_aesthetic_mlp}
+""",
+}
 
 
-# The registry: one (builder, oracle SQL) row per query; a query's name is
-# its builder's __name__.  GATED rows are the driver contract's queries.
-# Order is load-bearing twice over: the gate (driver + tools/
-# check_correctness.py) walks this list front to back with ONE DuckDB
-# connection for every oracle, and DuckDB buffer reservations can
-# accumulate across a long-connection session under co-tenant memory
-# pressure (observed: a 16KB allocation refused at <3GB RSS late in the
-# session while every oracle fits in 800MB fresh).  So the
-# DuckDB-heavy batch oracles run FIRST, right after the flagship, while
-# the connection is young; the cheap oracles absorb the tail.  The
-# streaming gate queries stay LAST (a wedged stream query must not
-# shadow the batch rows), with the two foreachBatch ones leading that
-# tail — see streaming/jobs._start_native for the py4j session cap.
-# r5: consolidated via family suites, then grown back to EXACTLY 50
-# with the real-kernel rows (audio suite, bmp pixels) — the driver's
-# 50-entry CORRECTNESS record witnesses EVERY row, streaming included.
-# The registry is FULL: a new query must join an existing suite or
-# consolidate one first (CLAUDE.md).
-GATED: list[tuple[Callable[[SparkSession, str], DataFrame], str]] = [
-    (q1_pricing_summary, Q1_SQL),
-    (transcripts_quality_windows, TRANSCRIPTS_QUALITY_WIN_SQL),
-    (emb_ann_lsh_topk, EMB_ANN_SQL),
-    (docs_ngram_neardup, DOCS_NGRAM_NEARDUP_SQL),
-    (docs_joint_neardup, DOCS_JOINT_NEARDUP_SQL),
-    (events_merge_spans, EVENTS_MERGE_SPANS_SQL),
-    (transcripts_contract_suite, TRANSCRIPTS_CONTRACT_SUITE_SQL),
-    (transcripts_sessionization, TRANSCRIPTS_SESSION_SQL),
-    (top_customers_by_revenue, TOP_CUSTOMERS_SQL),
-    (events_windows_suite, EVENTS_WINDOWS_SUITE_SQL),
-    (events_dedup_first, EVENTS_DEDUP_SQL),
-    (events_cep_error_purchase, EVENTS_CEP_SQL),
-    (transcript_prevturn_join, TRANSCRIPT_PREVTURN_SQL),
-    (transcript_messages_flat, TRANSCRIPT_MESSAGES_SQL),
-    (docs_quality_filter, DOCS_QUALITY_SQL),
-    (docs_quality_filter_mutated, DOCS_QUALITY_MUT_SQL),
-    (docs_eval_suite, DOCS_EVAL_SUITE_SQL),
-    (docs_exact_dedup, DOCS_EXACT_DEDUP_SQL),
-    (docs_minhash_signatures, DOCS_MINHASH_SQL),
-    (docs_minhash_lsh_pairs, DOCS_MINHASH_LSH_SQL),
-    (docs_text_analysis, DOCS_TEXT_ANALYSIS_SQL),
-    (docs_normalize_suite, DOCS_NORMALIZE_SUITE_SQL),
-    (events_expansion_suite, EVENTS_EXPANSION_SUITE_SQL),
-    (events_clip_suite, EVENTS_CLIP_SUITE_SQL),
-    (docs_parse_suite, DOCS_PARSE_SUITE_SQL),
-    (emb_cosine_topk, EMB_TOPK_SQL),
-    (emb_cosine_neardup, EMB_NEARDUP_SQL),
-    (emb_knn_avg_sim, EMB_KNN_SQL),
-    (emb_datatailor_select, EMB_DATATAILOR_SQL),
-    (docs_simhash_neardup, DOCS_SIMHASH_SQL),
-    (docs_winnow_fingerprints, DOCS_WINNOW_SQL),
-    (docs_prompted_qa, DOCS_PROMPTED_QA_SQL),
-    (docs_batch_generate, DOCS_BATCH_GEN_SQL),
-    (docs_rollout_judge, DOCS_ROLLOUT_JUDGE_SQL),
-    (docs_mcts_chains, DOCS_MCTS_SQL),
-    (docs_filter_suite, DOCS_FILTER_SUITE_SQL),
-    (docs_visual_dependency, DOCS_VISUAL_DEP_SQL),
-    (docs_image_dims, DOCS_IMAGE_DIMS_SQL),
-    (events_heavy_hitters, EVENTS_HEAVY_HITTERS_SQL),
-    (events_audio_suite, EVENTS_AUDIO_SUITE_SQL),
-    (docs_bmp_pixels, DOCS_BMP_PIXELS_SQL),
-    (transcripts_stream_pipeline, TRANSCRIPTS_STREAM_SQL),
-    (transcripts_stream_neardup, TRANSCRIPTS_STREAM_NEARDUP_SQL),
-    (events_stream_merge, EVENTS_STREAM_MERGE_SQL),
-    (transcripts_stream_windows, TRANSCRIPTS_STREAM_WIN_SQL),
-    (transcripts_stream_cep, TRANSCRIPTS_STREAM_CEP_SQL),
-    (transcripts_stream_sessions, TRANSCRIPTS_STREAM_SESS_SQL),
-    (transcripts_stream_cep_summary, TRANSCRIPTS_STREAM_CEP_SUM_SQL),
-    (transcripts_stream_join, TRANSCRIPTS_STREAM_JOIN_SQL),
-    (transcripts_stream_neardup_chain, TRANSCRIPTS_STREAM_NEARDUP_CHAIN_SQL),
-]
+def _suite(name: str) -> tuple[Callable[[SparkSession, str], DataFrame], str]:
+    """The registry row of union suite ``name``: a builder that runs its
+    text through ``spark.sql`` with each placeholder bound to the member's
+    DataFrame, and the oracle that inlines each member's oracle SQL."""
+    text = SUITES[name]
+    members = [f for _, f, _, _ in string.Formatter().parse(text) if f]
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return spark.sql(
+            text, **{m: MEMBER_QUERIES[m](spark, sf_dir) for m in members}
+        )
+
+    build.__name__ = build.__qualname__ = name
+    return build, text.format(**{m: f"({MEMBER_ORACLES[m]})" for m in members})
+
 
 # Member queries folded into suites (still individually runnable via
 # tools/check_correctness.py <sf> <name> for debugging a suite mismatch).
@@ -4523,10 +4217,82 @@ MEMBERS: list[tuple[Callable[[SparkSession, str], DataFrame], str]] = [
     (events_wav_vad, EVENTS_WAV_VAD_SQL),
 ]
 
-QUERIES = {fn.__name__: fn for fn, _ in GATED}
-ORACLES = {fn.__name__: sql for fn, sql in GATED}
 MEMBER_QUERIES = {fn.__name__: fn for fn, _ in MEMBERS}
 MEMBER_ORACLES = {fn.__name__: sql for fn, sql in MEMBERS}
+
+# The registry: one (builder, oracle SQL) row per query; a query's name is
+# its builder's __name__.  GATED rows are the driver contract's queries.
+# Order is load-bearing twice over: the gate (driver + tools/
+# check_correctness.py) walks this list front to back with ONE DuckDB
+# connection for every oracle, and DuckDB buffer reservations can
+# accumulate across a long-connection session under co-tenant memory
+# pressure (observed: a 16KB allocation refused at <3GB RSS late in the
+# session while every oracle fits in 800MB fresh).  So the
+# DuckDB-heavy batch oracles run FIRST, right after the flagship, while
+# the connection is young; the cheap oracles absorb the tail.  The
+# streaming gate queries stay LAST (a wedged stream query must not
+# shadow the batch rows), with the two foreachBatch ones leading that
+# tail — see streaming/jobs._start_native for the py4j session cap.
+# r5: consolidated via family suites, then grown back to EXACTLY 50
+# with the real-kernel rows (audio suite, bmp pixels) — the driver's
+# 50-entry CORRECTNESS record witnesses EVERY row, streaming included.
+# The registry is FULL: a new query must join an existing suite or
+# consolidate one first (CLAUDE.md).
+GATED: list[tuple[Callable[[SparkSession, str], DataFrame], str]] = [
+    (q1_pricing_summary, Q1_SQL),
+    (transcripts_quality_windows, TRANSCRIPTS_QUALITY_WIN_SQL),
+    (emb_ann_lsh_topk, EMB_ANN_SQL),
+    (docs_ngram_neardup, DOCS_NGRAM_NEARDUP_SQL),
+    (docs_joint_neardup, DOCS_JOINT_NEARDUP_SQL),
+    (events_merge_spans, EVENTS_MERGE_SPANS_SQL),
+    (transcripts_contract_suite, TRANSCRIPTS_CONTRACT_SUITE_SQL),
+    (transcripts_sessionization, TRANSCRIPTS_SESSION_SQL),
+    (top_customers_by_revenue, TOP_CUSTOMERS_SQL),
+    _suite("events_windows_suite"),
+    (events_dedup_first, EVENTS_DEDUP_SQL),
+    (events_cep_error_purchase, EVENTS_CEP_SQL),
+    (transcript_prevturn_join, TRANSCRIPT_PREVTURN_SQL),
+    (transcript_messages_flat, TRANSCRIPT_MESSAGES_SQL),
+    (docs_quality_filter, DOCS_QUALITY_SQL),
+    (docs_quality_filter_mutated, DOCS_QUALITY_MUT_SQL),
+    _suite("docs_eval_suite"),
+    (docs_exact_dedup, DOCS_EXACT_DEDUP_SQL),
+    (docs_minhash_signatures, DOCS_MINHASH_SQL),
+    (docs_minhash_lsh_pairs, DOCS_MINHASH_LSH_SQL),
+    (docs_text_analysis, DOCS_TEXT_ANALYSIS_SQL),
+    _suite("docs_normalize_suite"),
+    _suite("events_expansion_suite"),
+    _suite("events_clip_suite"),
+    _suite("docs_parse_suite"),
+    (emb_cosine_topk, EMB_TOPK_SQL),
+    (emb_cosine_neardup, EMB_NEARDUP_SQL),
+    (emb_knn_avg_sim, EMB_KNN_SQL),
+    (emb_datatailor_select, EMB_DATATAILOR_SQL),
+    (docs_simhash_neardup, DOCS_SIMHASH_SQL),
+    (docs_winnow_fingerprints, DOCS_WINNOW_SQL),
+    (docs_prompted_qa, DOCS_PROMPTED_QA_SQL),
+    (docs_batch_generate, DOCS_BATCH_GEN_SQL),
+    (docs_rollout_judge, DOCS_ROLLOUT_JUDGE_SQL),
+    (docs_mcts_chains, DOCS_MCTS_SQL),
+    _suite("docs_filter_suite"),
+    (docs_visual_dependency, DOCS_VISUAL_DEP_SQL),
+    (docs_image_dims, DOCS_IMAGE_DIMS_SQL),
+    (events_heavy_hitters, EVENTS_HEAVY_HITTERS_SQL),
+    _suite("events_audio_suite"),
+    (docs_bmp_pixels, DOCS_BMP_PIXELS_SQL),
+    (transcripts_stream_pipeline, TRANSCRIPTS_STREAM_SQL),
+    (transcripts_stream_neardup, TRANSCRIPTS_STREAM_NEARDUP_SQL),
+    (events_stream_merge, EVENTS_STREAM_MERGE_SQL),
+    (transcripts_stream_windows, TRANSCRIPTS_STREAM_WIN_SQL),
+    (transcripts_stream_cep, TRANSCRIPTS_STREAM_CEP_SQL),
+    (transcripts_stream_sessions, TRANSCRIPTS_STREAM_SESS_SQL),
+    (transcripts_stream_cep_summary, TRANSCRIPTS_STREAM_CEP_SUM_SQL),
+    (transcripts_stream_join, TRANSCRIPTS_STREAM_JOIN_SQL),
+    (transcripts_stream_neardup_chain, TRANSCRIPTS_STREAM_NEARDUP_CHAIN_SQL),
+]
+
+QUERIES = {fn.__name__: fn for fn, _ in GATED}
+ORACLES = {fn.__name__: sql for fn, sql in GATED}
 
 
 def entry_query(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> DataFrame:

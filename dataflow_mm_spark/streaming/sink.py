@@ -63,23 +63,11 @@ class _HadoopFS:
         return [s.getPath().getName() for s in self.fs.listStatus(self._Path(d))]
 
     def read_text(self, p: str) -> str:
-        """Small-file read through the Hadoop FS API (manifests are tiny).
-        commons-io ships with hadoop-client; a byte-loop fallback keeps the
-        path dependency-free."""
+        """Small-file read through the Hadoop FS API (manifests are tiny);
+        commons-io ships with Spark's jars."""
         stream = self.fs.open(self._Path(p))
         try:
-            try:
-                return self._jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            except Exception:
-                buf = bytearray()
-                while True:
-                    b = stream.read()
-                    if b < 0:
-                        break
-                    buf.append(b)
-                return buf.decode("utf-8")
+            return self._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
         finally:
             stream.close()
 
@@ -326,8 +314,10 @@ class ExactlyOnceParquetSink:
 
 
 class MetricsListener:
-    """StreamingQueryListener-shaped progress collector: appends one JSON
-    line per micro-batch to ``<path>`` (rows/sec, batch duration, watermark).
+    """StreamingQueryListener-shaped progress collector: appends each
+    micro-batch's full progress JSON (Spark's ``StreamingQueryProgress``:
+    rows/sec, ``durationMs``, watermark, ``stateOperators``, ``sources``,
+    ``sink``, ``observedMetrics``) as one line to ``<path>``.
     Registered via spark.streams.addListener on the wrapped instance."""
 
     def __init__(self, path: str):
@@ -343,18 +333,8 @@ class MetricsListener:
                 pass
 
             def onQueryProgress(self, event):
-                p = event.progress
-                rec = {
-                    "id": str(p.id),
-                    "batchId": p.batchId,
-                    "numInputRows": p.numInputRows,
-                    "inputRowsPerSecond": p.inputRowsPerSecond,
-                    "processedRowsPerSecond": p.processedRowsPerSecond,
-                    "durationMs": dict(p.durationMs) if p.durationMs else {},
-                    "eventTime": dict(p.eventTime) if p.eventTime else {},
-                }
                 with open(path, "a") as f:
-                    f.write(json.dumps(rec, default=str) + "\n")
+                    f.write(event.progress.json + "\n")
                     f.flush()
                     os.fsync(f.fileno())
 

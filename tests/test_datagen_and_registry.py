@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -51,6 +52,30 @@ def test_registry_table():
         assert isinstance(sql, str) and sql.strip(), fn.__name__
     assert list(R.QUERIES) == list(R.ORACLES) == gated
     assert list(R.MEMBER_QUERIES) == list(R.MEMBER_ORACLES) == members
+
+
+def test_suite_table():
+    """Every union-suite placeholder names a MEMBERS row, and every MEMBERS
+    row belongs to exactly one suite (the two hand-written suites are
+    listed here)."""
+    owners = {
+        "docs_text_analysis": [
+            "docs_lang_id", "docs_token_stats", "docs_quality_score",
+            "docs_fingerprint",
+        ],
+        "transcripts_contract_suite": [
+            "transcripts_role_violations", "transcripts_tool_pairing",
+        ],
+    }
+    assert len(R.SUITES) == 8
+    for name, text in R.SUITES.items():
+        owners[name] = re.findall(r"\{(\w+)\}", text)
+        assert owners[name], name
+        assert set(owners[name]) <= set(R.MEMBER_QUERIES), name
+    assert set(owners) <= set(R.QUERIES)
+    owned = [m for ms in owners.values() for m in ms]
+    assert len(R.MEMBERS) == 31
+    assert sorted(owned) == sorted(R.MEMBER_QUERIES)
 
 
 def test_gate_drain_failure_restores_conf_and_removes_work_dir(spark, tmp_path):

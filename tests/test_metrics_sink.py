@@ -53,6 +53,10 @@ def test_observed_metrics_and_listener(spark, tmp_path):
     # for it above, before removing the listener
     assert any("terminated" in rec for rec in lines), "listener never flushed"
     assert any(rec.get("numInputRows", 0) > 0 for rec in lines)
+    # the jsonl is Spark's full progress record: observe() counts included
+    jsonl_obs = [rec["observedMetrics"]["quality"] for rec in lines
+                 if rec.get("observedMetrics", {}).get("quality")]
+    assert sum(m["turns_kept"] for m in jsonl_obs) == total_kept
 
 
 def test_partitioned_sink_layout(spark, tmp_path):

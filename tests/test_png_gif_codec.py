@@ -1,9 +1,9 @@
 """Real PNG + GIF decode paths (stdlib zlib / pure-Python LZW, no image
-libs).  The fixtures here are deliberately INDEPENDENT implementations of
-the inverse direction: PNG scanlines are FORWARD-filtered by the test
-(decode_png unfilters), GIF index streams are LZW-ENCODED by the test
-(decode_gif's table-growth decoder reconstructs) — so a matched
-encode/decode defect cannot cancel."""
+libs).  The fixtures are deliberately INDEPENDENT implementations of the
+inverse direction (plans/fixture_codec, shared with the gate): PNG
+scanlines are FORWARD-filtered (decode_png unfilters), GIF index streams
+are LZW-ENCODED (decode_gif's table-growth decoder reconstructs) — so a
+matched encode/decode defect cannot cancel."""
 
 from __future__ import annotations
 
@@ -13,13 +13,14 @@ import numpy as np
 import pytest
 
 from dataflow_mm_spark.operators import multimodal as MM
+from dataflow_mm_spark.plans.fixture_codec import lzw_encode, png_forward_filter
 
 
 def _rand_img(rng, h, w, nchan):
     return rng.integers(0, 256, size=(h, w, nchan), dtype=np.uint8)
 
 
-# --- independent forward PNG filtering (spec direction: Filt = Raw - pred) --
+# --- PNG fixtures (forward filtering lives in plans/fixture_codec) ---------
 
 
 def _png_chunk(typ: bytes, data: bytes) -> bytes:
@@ -29,37 +30,6 @@ def _png_chunk(typ: bytes, data: bytes) -> bytes:
         + data
         + zlib.crc32(typ + data).to_bytes(4, "big")
     )
-
-
-def _forward_filter(raw_rows: np.ndarray, bpp: int, ftypes) -> bytes:
-    h, stride = raw_rows.shape
-    out = bytearray()
-    prior = bytes(stride)
-    for y in range(h):
-        row = raw_rows[y].tobytes()
-        ft = ftypes[y % len(ftypes)]
-        out.append(ft)
-        for x in range(stride):
-            raw = row[x]
-            a = row[x - bpp] if x >= bpp else 0
-            b = prior[x]
-            c = prior[x - bpp] if x >= bpp else 0
-            if ft == 0:
-                v = raw
-            elif ft == 1:
-                v = (raw - a) & 0xFF
-            elif ft == 2:
-                v = (raw - b) & 0xFF
-            elif ft == 3:
-                v = (raw - ((a + b) >> 1)) & 0xFF
-            else:  # Paeth
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                v = (raw - pred) & 0xFF
-            out.append(v)
-        prior = row
-    return bytes(out)
 
 
 def _build_png(px: np.ndarray, ctype: int, ftypes=(0, 1, 2, 3, 4), plte=None) -> bytes:
@@ -72,7 +42,7 @@ def _build_png(px: np.ndarray, ctype: int, ftypes=(0, 1, 2, 3, 4), plte=None) ->
     body = _png_chunk(b"IHDR", ihdr)
     if plte is not None:
         body += _png_chunk(b"PLTE", plte.astype(np.uint8).tobytes())
-    idat = zlib.compress(_forward_filter(raw, nchan, ftypes))
+    idat = zlib.compress(png_forward_filter(raw, nchan, ftypes))
     # split IDAT across two chunks to exercise concatenation
     half = len(idat) // 2
     body += _png_chunk(b"IDAT", idat[:half]) + _png_chunk(b"IDAT", idat[half:])
@@ -148,45 +118,8 @@ def test_png_rejects():
         MM.decode_png(_build_png(idx, 3, plte=pal))
 
 
-# --- independent GIF LZW encoder (dict-based, variable width) ----------------
-
-
-def _lzw_encode(indices, min_code_size: int) -> bytes:
-    clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
-    d = {bytes([i]): i for i in range(1 << min_code_size)}
-    next_code = eoi + 1
-    width = min_code_size + 1
-    bits = []
-
-    def emit(code, w):
-        for i in range(w):
-            bits.append((code >> i) & 1)
-
-    emit(clear, width)
-    seq = bytes([indices[0]])
-    for k in indices[1:]:
-        cand = seq + bytes([k])
-        if cand in d:
-            seq = cand
-            continue
-        emit(d[seq], width)
-        if next_code < 4096:
-            d[cand] = next_code
-            next_code += 1
-            # encoder lags the decoder's width bump by one code: the
-            # decoder installs this entry only AFTER reading the NEXT code
-            if next_code == (1 << width) + 1 and width < 12:
-                width += 1
-        seq = bytes([k])
-    emit(d[seq], width)
-    emit(eoi, width)
-    out = bytearray()
-    for i in range(0, len(bits), 8):
-        byte = 0
-        for j, b in enumerate(bits[i : i + 8]):
-            byte |= b << j
-        out.append(byte)
-    return bytes(out)
+# --- GIF fixtures: the dict-LZW encoder (fixture_codec) and an all-literal
+# stream that shares no table logic with it ---------------------------------
 
 
 def _lzw_encode_uncompressed(indices, min_code_size: int) -> bytes:
@@ -267,7 +200,7 @@ def _build_gif(
     enc = (
         _lzw_encode_uncompressed(flat, min_code)
         if uncompressed
-        else _lzw_encode(flat, min_code)
+        else lzw_encode(flat, min_code)
     )
     blocks = bytearray([min_code])
     for i in range(0, len(enc), 200):  # sub-block split exercises reassembly

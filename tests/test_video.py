@@ -14,6 +14,7 @@ import pytest
 from dataflow_mm_spark.operators import jpegcodec as J
 from dataflow_mm_spark.operators import multimodal as MM
 from dataflow_mm_spark.operators import video as V
+from dataflow_mm_spark.plans.fixture_codec import lzw_encode
 
 
 def _block_constant_img(rng, h, w):
@@ -98,42 +99,12 @@ def test_parse_avi_hostile_inputs():
         V.decode_avi(payload, [99])               # out-of-range frame index
 
 
-# --- independent animated-GIF fixture encoder (fixture-side LZW; the
+# --- animated-GIF fixture (fixture-side LZW from plans/fixture_codec; the
 # kernel's table-growth decoder + disposal compositor are under test) ----
 
 
-def _lzw_encode(seq, mcs):
-    clear, eoi = 1 << mcs, (1 << mcs) + 1
-    d = {bytes([i]): i for i in range(1 << mcs)}
-    next_code, width = eoi + 1, mcs + 1
-    bits = []
-
-    def emit(code, wdt):
-        for i in range(wdt):
-            bits.append((code >> i) & 1)
-
-    emit(clear, width)
-    s = bytes([seq[0]])
-    for k in seq[1:]:
-        cand = s + bytes([k])
-        if cand in d:
-            s = cand
-            continue
-        emit(d[s], width)
-        if next_code < 4096:
-            d[cand] = next_code
-            next_code += 1
-            if next_code == (1 << width) + 1 and width < 12:
-                width += 1
-        s = bytes([k])
-    emit(d[s], width)
-    emit(eoi, width)
-    enc = bytearray()
-    for i in range(0, len(bits), 8):
-        byte = 0
-        for j, bit in enumerate(bits[i : i + 8]):
-            byte |= bit << j
-        enc.append(byte)
+def _gif_sub_blocks(seq, mcs):
+    enc = lzw_encode(seq, mcs)
     out = bytearray([mcs])
     for i in range(0, len(enc), 255):
         part = enc[i : i + 255]
@@ -163,7 +134,7 @@ def _anim_gif(sw, sh, gct, bg_idx, frames):
         out += f["left"].to_bytes(2, "little") + f["top"].to_bytes(2, "little")
         out += w.to_bytes(2, "little") + h.to_bytes(2, "little")
         out += bytes([0])  # no local palette, no interlace
-        out += _lzw_encode(f["idx"].reshape(-1).tolist(), mcs)
+        out += _gif_sub_blocks(f["idx"].reshape(-1).tolist(), mcs)
     out += b"\x3b"
     return bytes(out)
 
