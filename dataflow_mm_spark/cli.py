@@ -25,6 +25,11 @@ recorded offsets with the exactly-once sink guaranteeing no duplicates.
 ``--est-state-keys`` (with --executors / --executor-heap-gb) selects the
 state-store provider from the measured HDFS/RocksDB crossover
 (session.state_store_conf; BENCH.md §5) instead of the default.
+
+The session takes its master and every ``--conf`` from spark-submit; the
+factory defaults in ``session.DEFAULTS`` fill only what the submit leaves
+unset. An object-store checkpoint turns Spark's checkpoint checksum back on
+with ``--conf spark.sql.streaming.checkpoint.fileChecksum.enabled=true``.
 """
 
 from __future__ import annotations

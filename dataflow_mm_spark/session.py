@@ -1,29 +1,78 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory: one session path and one precedence rule.
 
-Defaults are tuned for correctness-at-scale first:
-* AQE on (runtime re-plan, skew-join splitting, partition coalescing);
-* Arrow on for every pandas-UDF exchange;
-* session timezone pinned to UTC so event-time semantics are stable and
-  DuckDB-oracle comparisons are reproducible;
-* shuffle partitions sized from the master's core count (4x cores) unless
-  given explicitly — on a real cluster this would come from the job config.
+Every setting resolves the same way: an explicit argument (``master``,
+``shuffle_partitions``, ``extra_conf``) beats the launch conf, and the launch
+conf beats the factory default in :data:`DEFAULTS`. The launch conf is what
+``SparkConf()`` holds before the session is built: ``spark-submit
+--master/--conf`` and spark-defaults.conf (in a process whose driver JVM is
+already up, whatever that JVM was started with).
+
+When nothing sets them, the master is ``local[<usable cores>]`` and shuffle
+partitions are ``max(8, defaultParallelism)``, read from the created
+session. There is no warm-up: a session's first query pays its own codegen
+and Python-worker start.
 """
 
 from __future__ import annotations
 
 import os
-import re
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
+HDFS_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+)
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 
-def _cores_of(master: str) -> int:
-    m = re.match(r"local\[(\d+|\*)\]", master)
-    if not m:
-        return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if m.group(1) == "*":
-        return os.cpu_count() or 8
-    return int(m.group(1))
+DEFAULTS = {
+    # event-time semantics stay stable and DuckDB-oracle comparisons
+    # reproducible
+    "spark.sql.session.timeZone": "UTC",
+    # AQE: runtime re-plan, skew-join splitting, partition coalescing
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Arrow for every pandas-UDF exchange
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    # 128MB input splits: at 100TB that is ~800k tasks, fine for a
+    # 1000-executor cluster; local tests override nothing.
+    "spark.sql.files.maxPartitionBytes": "134217728",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.driver.memory": "8g",
+    # throughput-oriented collector: G1's concurrent cycles inflate
+    # state-store commit times 3-10x under wide executors (measured
+    # 2026-08-17 on the 13.7M-turn enrich+dedup stream: local[32]
+    # sustained 196-303k t/s on G1 with 75-236s total commit, 401-459k
+    # t/s on ParallelGC with 34-52s — and run-to-run variance collapsed).
+    # ETL/streaming workloads have no latency SLO on the driver, so the
+    # stop-the-world throughput collector is the right default.
+    "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
+    # local mode folds executors into the driver JVM; on a real cluster
+    # the executor flag is the one that matters
+    "spark.executor.extraJavaOptions": "-XX:+UseParallelGC",
+    "spark.ui.enabled": "false",
+    # Spark 4.1 writes a checksum sidecar for every checkpoint file and
+    # BLOCKS each state-store delta close on the async checksum future
+    # (thread dumps r6: all 32 task threads parked in
+    # ChecksumCancellableFSDataOutputStream.close -> awaitResult inside
+    # finalizeDeltaFile; ~0.3-0.7s of summed commit time per partition
+    # per batch).  Local/HDFS checkpoints already carry
+    # filesystem-level CRCs (ChecksumFileSystem .crc sidecars / HDFS
+    # block checksums) — the Spark-level layer targets object stores
+    # without native checksums.  Disabling it lifted the sustained
+    # enrich+dedup stream 86.7k -> 100.6k turns/s (A/B r6).  Object-store
+    # deployments turn it back on with
+    # ``--conf spark.sql.streaming.checkpoint.fileChecksum.enabled=true``.
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
+    # in-memory provider: right while state fits the heap; use
+    # state_store_conf(est_keys, ...) via extra_conf to flip to RocksDB
+    # past the measured crossover (BENCH.md §5)
+    "spark.sql.streaming.stateStore.providerClass": HDFS_PROVIDER,
+}
 
 
 def get_spark(
@@ -32,70 +81,34 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    cores = _cores_of(master)
-    if shuffle_partitions is None:
+    explicit = dict(extra_conf or {})
+    if master is not None:
+        explicit["spark.master"] = master
+    if shuffle_partitions is not None:
+        explicit["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    # A plain `python` run starts the driver JVM here, so driver memory and
+    # JVM options go in as its launch flags (they take effect only at
+    # launch); under spark-submit the JVM is already up and this connects.
+    launch_flags = {
+        **DEFAULTS,
+        "spark.master": f"local[{len(os.sched_getaffinity(0))}]",
+        **explicit,
+    }
+    SparkContext._ensure_initialized(conf=SparkConf().setAll(launch_flags.items()))
+    conf = {**DEFAULTS, **dict(SparkConf().getAll()), **explicit}
+    spark = SparkSession.builder.config(map=conf).appName(app_name).getOrCreate()
+    if "spark.sql.shuffle.partitions" not in conf:
         # 1x cores: AQE coalesces batch shuffles anyway, and streaming state
         # store instances (fixed at shuffle_partitions) stay cheap to commit.
         # A real multi-executor cluster would size this 2-3x total cores.
-        shuffle_partitions = max(8, cores)
-
-    b = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # 128MB input splits: at 100TB that is ~800k tasks, fine for a
-        # 1000-executor cluster; local tests override nothing.
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        # throughput-oriented collector: G1's concurrent cycles inflate
-        # state-store commit times 3-10x under wide executors (measured
-        # 2026-08-17 on the 13.7M-turn enrich+dedup stream: local[32]
-        # sustained 196-303k t/s on G1 with 75-236s total commit, 401-459k
-        # t/s on ParallelGC with 34-52s — and run-to-run variance collapsed).
-        # ETL/streaming workloads have no latency SLO on the driver, so the
-        # stop-the-world throughput collector is the right default; override
-        # via extra_conf or SPARK_GRAFT_GC_OPTS.
-        .config("spark.driver.extraJavaOptions",
-                os.environ.get("SPARK_GRAFT_GC_OPTS", "-XX:+UseParallelGC"))
-        # local mode folds executors into the driver JVM; on a real cluster
-        # the executor flag is the one that matters
-        .config("spark.executor.extraJavaOptions",
-                os.environ.get("SPARK_GRAFT_GC_OPTS", "-XX:+UseParallelGC"))
-        .config("spark.ui.enabled", "false")
-        # Spark 4.1 writes a checksum sidecar for every checkpoint file and
-        # BLOCKS each state-store delta close on the async checksum future
-        # (thread dumps r6: all 32 task threads parked in
-        # ChecksumCancellableFSDataOutputStream.close -> awaitResult inside
-        # finalizeDeltaFile; ~0.3-0.7s of summed commit time per partition
-        # per batch).  Local/HDFS checkpoints already carry
-        # filesystem-level CRCs (ChecksumFileSystem .crc sidecars / HDFS
-        # block checksums) — the Spark-level layer targets object stores
-        # without native checksums.  Disabling it lifted the sustained
-        # enrich+dedup stream 86.7k -> 100.6k turns/s (A/B r6).  Override
-        # via extra_conf for object-store deployments.
-        .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-                "false")
-        # in-memory provider: right while state fits the heap; use
-        # state_store_conf(est_keys, ...) via extra_conf to flip to RocksDB
-        # past the measured crossover (BENCH.md §5)
-        .config("spark.sql.streaming.stateStore.providerClass", HDFS_PROVIDER)
-    )
-    for k, v in (extra_conf or {}).items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(max(8, spark.sparkContext.defaultParallelism)),
+        )
     spark.sparkContext.setLogLevel("WARN")
-    # builder.config only reaches a FRESH driver JVM — with getOrCreate reuse
-    # or spark-submit-supplied opts the ParallelGC default is silently
-    # ignored, which invalidates streaming-state benchmarks (CLAUDE.md).
-    # Detect that: read the ACTUAL collector and warn if it isn't Parallel.
+    # JVM options only reach a freshly launched driver JVM: a reused one, or
+    # the one spark-submit started with its own options, keeps its
+    # collector. Read the ACTUAL collector and warn if it isn't Parallel.
     gc_names = runtime_gc(spark)
     if gc_names and not any(n.startswith("PS ") for n in gc_names):
         import warnings
@@ -107,69 +120,7 @@ def get_spark(
             RuntimeWarning,
             stacklevel=2,
         )
-    if (
-        os.environ.get("SPARK_GRAFT_WARM", "1") != "0"
-        and spark.conf.get("spark.dataflow_mm.warmed", None) is None
-    ):
-        _warm_session(spark)
-        spark.conf.set("spark.dataflow_mm.warmed", "true")
     return spark
-
-
-def _warm_session(spark: SparkSession) -> None:
-    """One-time session warmup: compile the whole-stage-codegen, noop-sink,
-    parquet writer/reader and hash-aggregate code paths on throwaway data so
-    the FIRST real query does not absorb JVM/janino initialization
-    (measured r6: the first registry query over parquet pays ~3.5 s of
-    pure warmup at local[32]; after this warmup it runs at its steady
-    ~0.5-1.3 s).  Standard practice for a long-lived session factory —
-    no user data or query results are involved.  Skippable via
-    SPARK_GRAFT_WARM=0 (e.g. for session-startup micro-benchmarks)."""
-    import shutil
-    import tempfile
-
-    try:
-        spark.range(100_000).selectExpr(
-            "sum(id) a", "count(distinct id % 7) b"
-        ).write.format("noop").mode("overwrite").save()
-        # spawn + warm the reused Python workers (numpy/pandas import costs
-        # ~1-2 s per worker, otherwise absorbed by the first pandas-UDF
-        # query of the session — measured r6: first mapInPandas query
-        # 5.9 s cold vs 4.6 s after this 1.8 s one-time pass)
-        import pandas as _pd
-
-        def _gen(it):
-            import numpy as _np
-
-            for pdf in it:
-                yield _pd.DataFrame({"x": _np.asarray(pdf["id"]) * 2})
-
-        spark.range(
-            100 * spark.sparkContext.defaultParallelism,
-            numPartitions=spark.sparkContext.defaultParallelism,
-        ).mapInPandas(_gen, "x long").write.format("noop").mode(
-            "overwrite"
-        ).save()
-        d = tempfile.mkdtemp(prefix="dfmm_warm_")
-        try:
-            spark.range(10_000).selectExpr(
-                "id", "cast(id as double) x", "cast(id as string) s"
-            ).write.mode("overwrite").parquet(d)
-            spark.read.parquet(d).selectExpr(
-                "sum(x) a", "count(distinct s) b"
-            ).write.format("noop").mode("overwrite").save()
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-    except Exception:  # noqa: BLE001 — warmup must never fail the session
-        pass
-
-
-HDFS_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-)
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
 
 
 def state_store_conf(

@@ -1,15 +1,8 @@
 from __future__ import annotations
 
-import os
-
 import pytest
 
-# tests assert semantics, not performance: skip the session factory's
-# one-time codegen/parquet/Python-worker warmup in every session the suite
-# (or its spark-submit subprocesses) creates
-os.environ.setdefault("SPARK_GRAFT_WARM", "0")
-
-from dataflow_mm_spark.session import get_spark  # noqa: E402
+from dataflow_mm_spark.session import get_spark
 
 
 @pytest.fixture(scope="session")

@@ -14,6 +14,7 @@ pip-installed CLI, dataflow/cli.py).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import subprocess
@@ -91,6 +92,12 @@ def test_spark_submit_py_files_packaging(spark, tiny_transcripts, tmp_path):
         cwd=str(scratch), env=env,
     )
     assert r.returncode == 0, f"spark-submit failed:\n{r.stderr[-4000:]}"
+
+    # the submit's --conf beats the session factory's default: batch 0's
+    # offset log records the shuffle partitions the query ran with
+    with open(os.path.join(ck, "offsets", "0")) as f:
+        batch0 = json.loads(f.read().splitlines()[1])
+    assert batch0["conf"]["spark.sql.shuffle.partitions"] == "4"
 
     sink = ExactlyOnceParquetSink(out)
     committed = sink.read_committed(spark)

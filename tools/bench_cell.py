@@ -28,10 +28,6 @@ def main() -> None:
             sys.argv[2::2],
         )
     )
-    heap = args.get("heap")
-    if heap:
-        os.environ["SPARK_DRIVER_MEM"] = heap
-
     import shutil
     import tempfile
     import time
@@ -45,6 +41,8 @@ def main() -> None:
     mft = int(args.get("mft", "64"))
     parts = int(args.get("partitions", "32"))
     extra = {}
+    if args.get("heap"):
+        extra["spark.driver.memory"] = args["heap"]
     if args.get("provider") == "rocksdb":
         extra["spark.sql.streaming.stateStore.providerClass"] = (
             "org.apache.spark.sql.execution.streaming.state."

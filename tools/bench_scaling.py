@@ -68,18 +68,18 @@ import json, os, sys, time, shutil
 sys.path.insert(0, %(repo)r)
 
 cfg = json.loads(sys.argv[1])
-# flat heap by default — per-core sizing measured catastrophic in one JVM
-# (see module docstring)
-if cfg.get("heap"):
-    os.environ["SPARK_DRIVER_MEM"] = cfg["heap"]
 
 from dataflow_mm_spark.session import get_spark
 from dataflow_mm_spark.streaming import jobs
 
 master, inp, work, name = cfg["master"], cfg["inp"], cfg["work"], cfg["job"]
 MFT = cfg["mft"]  # 256 input files / MFT batches; batches 1+ are sustained
+# flat heap by default — per-core sizing measured catastrophic in one JVM
+# (see module docstring)
 spark = get_spark("scale", master=master,
-                  shuffle_partitions=cfg.get("partitions"))
+                  shuffle_partitions=cfg.get("partitions"),
+                  extra_conf={"spark.driver.memory": cfg["heap"]}
+                  if cfg.get("heap") else None)
 n = spark.read.parquet(inp).count()
 FNS = {
     "enrich_dedup": lambda o, c: jobs.turns_pipeline(
